@@ -290,6 +290,10 @@ TEMPLATES = {
 }
 
 
+# the base tables the templates read
+TEMPLATE_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
+
+
 def instance_sql(instance: str) -> str:
     name, v = instance.rsplit(":", 1)
     return TEMPLATES[name](int(v))
@@ -302,10 +306,18 @@ def all_instances() -> list[str]:
 CLIENTS = [f"10.0.0.{i}:{40000 + i}" for i in range(1, 5)]
 
 
-# records of each kind in one audit log; the kept SELECTs use every
-# template equally often, so seeds differ in order and literals, not in mix
-LOG_MIX = {"kept": 3 * len(TEMPLATES), "duplicate": 40, "error": 76, "non_query": 72,
-           "truncated": 76}
+# Records of each kind in one audit log. The mix is an assumption, not a
+# measured share: the kept count is what the replay phase can run in a
+# run's time (two instances of every template), and the four drop branches
+# of the dump (duplicate query id, ERR state, non-query, truncated) share
+# the rest equally, so the log reaches 300 records and every branch does
+# the same work. A real log such as the reference fixture in FIXTURES.md is
+# mostly kept SELECTs; this one is drop-heavy, so the dump does more work
+# per replayed statement than it would on such a log.
+LOG_MIX = {"kept": 2 * len(TEMPLATES), "duplicate": 69, "error": 69, "non_query": 69,
+           "truncated": 69}
+# the marker the Doris audit plugin appends to a statement it cut short
+TRUNCATION_MARKER = " ... /* total {n} rows, truncated audit_plugin_max_sql_length=4096 */"
 
 
 def audit_log(seed: int) -> tuple[str, dict[str, str]]:
@@ -316,7 +328,9 @@ def audit_log(seed: int) -> tuple[str, dict[str, str]]:
     written on several lines, with ``\\n`` escapes or on one line; the
     other records repeat an earlier query id, carry ``State=ERR``, are
     non-queries (SHOW/USE/EXPLAIN) or are truncated, and the dump must
-    drop them. The mix is fixed; the seed sets order, forms and literals."""
+    drop them. Truncated records end in the audit plugin's marker or in a
+    bare ``...``, the two forms the dump recognizes. The mix is fixed; the
+    seed sets order, forms and literals."""
     rng = np.random.default_rng([seed, 1])
     kinds = [k for k, n in LOG_MIX.items() for _ in range(n)]
     kinds = [kinds[i] for i in rng.permutation(len(kinds))]
@@ -343,7 +357,11 @@ def audit_log(seed: int) -> tuple[str, dict[str, str]]:
             stmt = ["SHOW TABLES", "USE db_main", "EXPLAIN SELECT count(*) FROM orders"][int(rng.integers(0, 3))]
             is_query = "false"
         elif kind == "truncated":
-            stmt = instance_sql(inst).replace("\n", " ")[:60] + " ..."
+            stmt = instance_sql(inst).replace("\n", " ")[:60]
+            if rng.random() < 0.5:
+                stmt += TRUNCATION_MARKER.format(n=int(rng.integers(1, 10**6)))
+            else:
+                stmt += " ..."
         else:
             sql = instance_sql(inst)
             stmt = [sql, sql.replace("\n", "\\n"), sql.replace("\n", " ")][int(rng.integers(0, 3))]
@@ -384,18 +402,20 @@ def genconf(seed: int, rows: int) -> dict:
     ]}]}
 
 
-# One unit of the commit stream. A block runs in order; blocks are shuffled.
-# Copy-on-write commits (merge, delete, compact) refuse to run while a
-# merge-on-read deletion vector is live, so both vectors sit in one block
-# that ends with the purge.
-UNIT_BLOCKS = ([["append_version"]] * 4 + [["merge_upsert"]] * 2 + [["delete_where"]] * 2
-               + [["compact_files"]] + [["delete_where_mor", "delete_where_mor", "purge_deletes"]])
-UNIT_READS = (["read_version"] * 3 + ["read_as_of"] * 2 + ["read_version_pruned"] * 3
-              + ["read_changes"] * 2 + ["read_with_deletes"] * 2)
+# One unit of the commit stream: every commit kind once. The shares are an
+# assumption, chosen so that each commit and read function runs at least
+# once per run and the unit fits the run's time. A block runs in
+# order; blocks are shuffled. Copy-on-write commits (merge, delete,
+# compact) refuse to run while a merge-on-read deletion vector is live, so
+# the vector and its purge sit in one block.
+UNIT_BLOCKS = ([["append_version"]] + [["merge_upsert"]] + [["delete_where"]]
+               + [["compact_files"]] + [["delete_where_mor", "purge_deletes"]])
+UNIT_READS = (["read_version", "read_as_of", "read_version_pruned", "read_version_pruned",
+               "read_changes", "read_with_deletes"])
 
 
 def commit_plan(seed: int, rows: int, units: int) -> list[dict]:
-    """A seeded stream of ``12 * units`` commits, each followed by a read.
+    """A seeded stream of ``6 * units`` commits, each followed by a read.
 
     Every unit has the same mix of commit and read kinds (``UNIT_BLOCKS``,
     ``UNIT_READS``); the seed sets their order and parameters. Parameters

@@ -1,15 +1,20 @@
 """``keys`` workload: one closed-loop client over operator verify keys.
 
-Each cycle is one pass over ``KEYS`` in a seed-permuted order. A key is
-timed as ``fn(spark, sf_dir)`` (the plan build, including any jobs the
-build fires) plus ``.collect()``, and its rows are checked against the
-pinned (row count, order-insensitive digest).
+A run is one pass over ``KEYS`` in a seed-permuted order. A key is timed
+as ``fn(spark, sf_dir)`` (the plan build, including any jobs the build
+fires) plus ``.collect()``, and its rows are checked against the pinned
+(row count, order-insensitive digest).
 
 ``KEYS`` holds one read-only key of ``bench.py``'s headline list for each
-of 10 ``dodo_spark.operators`` modules. A pass over every read-only
-headline key takes 60-110 s on 4 cores and one key from each of the 21
-modules that have one takes 44 s in a fresh JVM; neither fits a run of
-the benchmark's time budget. The 10 keys take 15-20 s in a fresh JVM.
+of the 20 ``dodo_spark.operators`` modules that have one: the key
+commits no versioned table, writes no scratch or warehouse file and
+starts no streaming query. Where a module has several, the key is the
+one with the shortest pass in a fresh JVM. The keys marked heavy take 3-14 s each at
+sf0.1 in a fresh JVM; they run on the sf0.001 tables, which keeps the
+pass near 40 s on 4 cores. Most of a key's time in a fresh JVM is
+first-use cost (code generation, Python workers), so smaller tables cut
+it far less than they cut the data: the eight heavy keys take about 49 s
+at sf0.1, 21 s at sf0.01 and 16 s at sf0.001.
 """
 
 from __future__ import annotations
@@ -22,19 +27,37 @@ import traceback
 
 from perfbench import inputs
 
-# key -> its registering module under dodo_spark.operators (the layer name)
+HEAVY_SF = 0.001  # the largest scale factor a heavy key runs at
+
+# key -> (its registering module under dodo_spark.operators, the layer
+# name; whether it is heavy)
 KEYS = {
-    "agg_key_merge": "aggkey",
-    "analytics_rfm_segments": "analytics",
-    "dedup_exact": "dedup",
-    "events_funnel": "funnel",
-    "layout_zorder": "layout",
-    "join_inner": "relational",
-    "scalar_json": "scalar",
-    "similarity_topk_vectorized": "similarity",
-    "text_repetition": "text",
-    "analytics_forecast_revenue": "tpch_complete",
+    "agg_key_merge": ("aggkey", False),
+    "analytics_rfm_segments": ("analytics", False),
+    "ann_dispatch": ("ann", True),
+    "dedup_exact": ("dedup", False),
+    "window_range_time": ("events", False),
+    "events_cuped": ("experiment", False),
+    "events_funnel": ("funnel", False),
+    "graph_pagerank": ("graph", True),
+    "layout_zorder": ("layout", False),
+    "profile_join_cardinality": ("profiling", True),
+    "profile_expectations": ("quality", True),
+    "join_inner": ("relational", False),
+    "join_bloom_prune": ("runtime_filter", True),
+    "scalar_json": ("scalar", False),
+    "search_hybrid_rrf": ("search", True),
+    "similarity_topk_vectorized": ("similarity", False),
+    "agg_kmv_theta": ("sketch", True),
+    "stats_benford": ("stats", True),
+    "text_repetition": ("text", False),
+    "analytics_forecast_revenue": ("tpch_complete", False),
 }
+
+
+def key_sf(key: str, sf: float) -> float:
+    """The scale factor ``key`` runs at in a run at ``sf``."""
+    return min(sf, HEAVY_SF) if KEYS[key][1] else sf
 
 
 def _cell(v) -> str:
@@ -63,11 +86,11 @@ def digest(rows) -> tuple[int, str]:
 
 
 class Keys:
-    cycle_s = 15.0
-
     def __init__(self, ctx: dict) -> None:
         self.ctx = ctx
-        self.pins = ctx["pins"]["keys"][f"{ctx['sf']:g}"]
+        self.sf = {k: key_sf(k, ctx["sf"]) for k in KEYS}
+        self.pins = {k: ctx["pins"]["keys"][f"{sf:g}"].get(k) for k, sf in self.sf.items()}
+        self.scales = set(self.sf.values())
 
     def prepare(self, spark) -> None:
         from dodo_spark import registry
@@ -75,22 +98,22 @@ class Keys:
         registry.queries()  # imports every operator module
         self.order = inputs.key_order(self.ctx["seed"], list(KEYS))
 
-    def cycle(self, spark, tracer, i: int) -> dict:
+    def run(self, spark, tracer) -> dict:
         from dodo_spark import registry
 
         ops = []
-        order = self.order if i == 0 else inputs.key_order(self.ctx["seed"] + 7919 * i, list(KEYS))
-        for key in order:
-            layer = f"operators.{KEYS[key]}"
+        t_run = time.perf_counter()
+        for key in self.order:
+            layer = f"operators.{KEYS[key][0]}"
             fn = registry.REGISTRY[key].fn
             t0 = time.perf_counter()
             try:
                 with tracer.span(f"{layer}.build", key):
-                    df = fn(spark, self.ctx["sf_dir"])
+                    df = fn(spark, self.ctx["dirs"][self.sf[key]])
                 with tracer.span(f"{layer}.collect", key):
                     rows = df.collect()
                 dt = time.perf_counter() - t0
-                pin = self.pins.get(key)
+                pin = self.pins[key]
                 got = digest(rows)
                 ok = pin is not None and [pin["rows"], pin["digest"]] == list(got)
                 if not ok:
@@ -99,21 +122,17 @@ class Keys:
                 traceback.print_exc()
                 dt, ok = time.perf_counter() - t0, False
             ops.append((key, dt, ok))
-        return {"ops": ops, "wall_s": sum(o[1] for o in ops)}
+        return {"ops": ops, "busy_s": sum(o[1] for o in ops), "wall_s": time.perf_counter() - t_run}
 
     def report(self, ops) -> dict:
         import math
         import statistics
 
-        per_key: dict[str, list[float]] = {}
-        for k, dt, _ok in ops:
-            per_key.setdefault(k, []).append(dt)
-        med = [statistics.median(v) for v in per_key.values()]
         return {
-            "geomean_ms": {"value": math.exp(statistics.fmean(math.log(x) for x in med)) * 1000,
+            "geomean_ms": {"value": math.exp(statistics.fmean(math.log(o[1]) for o in ops)) * 1000,
                            "unit": "ms"},
-            "keys": {k: round(statistics.median(v) * 1000, 2) for k, v in sorted(per_key.items())},
+            "keys": {k: {"ms": round(dt * 1000, 2), "sf": self.sf[k]} for k, dt, _ok in sorted(ops)},
         }
 
-    def layer_counters(self, spans: dict, n: int) -> dict:
+    def layer_counters(self, spans: dict) -> dict:
         return {}

@@ -2,8 +2,8 @@
 
 Layers are the program's own modules. Span names are the layer names, so
 ``<span>.busy_s`` is that layer's self time and ``<span>.jobs`` the Spark
-jobs it started. Every value is per traced cycle. All workloads print the
-full list; a layer a workload does not touch reads 0.
+jobs it started. Every value covers the traced run's one pass. All
+workloads print the full list; a layer a workload does not touch reads 0.
 """
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ from __future__ import annotations
 from perfbench import trace
 from perfbench.keys import KEYS
 
-OPERATOR_MODULES = sorted(set(KEYS.values()))
+OPERATOR_MODULES = sorted(module for module, _heavy in KEYS.values())
 COMMITS = ("sources.versioned.write_version", "sources.versioned.append_version",
            "sources.versioned.merge_upsert", "sources.versioned.delete_where",
            "sources.versioned.compact_files", "sources.mor.delete_where_mor",
@@ -55,9 +55,8 @@ UNITS: dict[str, str] = {
 }
 
 
-def per_layer(wl, tracer: trace.Tracer, jobs: list[dict], windows: list[tuple]) -> dict:
-    """Every per-layer metric, averaged over the traced cycles."""
-    n = max(len(windows), 1)
+def per_layer(wl, tracer: trace.Tracer, jobs: list[dict], window: tuple[float, float]) -> dict:
+    """Every per-layer metric of the traced pass."""
     by_span = trace.attribute(tracer.spans, jobs)
     self_t = tracer.self_times()
     spans: dict[str, dict] = {}
@@ -70,17 +69,17 @@ def per_layer(wl, tracer: trace.Tracer, jobs: list[dict], windows: list[tuple]) 
     for name, a in spans.items():
         if name.startswith("operators."):
             layer, part = name.rsplit(".", 1)
-            out[f"{layer}.{part}_s"] += a["busy_s"] / n
-            out[f"{layer}.jobs"] += a["jobs"] / n
+            out[f"{layer}.{part}_s"] += a["busy_s"]
+            out[f"{layer}.jobs"] += a["jobs"]
             if part == "build":
-                out["spark.build_jobs"] += a["jobs"] / n
+                out["spark.build_jobs"] += a["jobs"]
             continue
         if f"{name}.busy_s" in out:
-            out[f"{name}.busy_s"] = a["busy_s"] / n
+            out[f"{name}.busy_s"] = a["busy_s"]
         if f"{name}.jobs" in out:
-            out[f"{name}.jobs"] = a["jobs"] / n
-    in_window = [j for j in jobs if any(w0 <= j["submitted"] <= w1 for w0, w1 in windows)]
-    for k, v in trace.sum_jobs(in_window).items():
-        out[f"spark.{k}"] = v / n
-    out.update(wl.layer_counters(spans, n))
+            out[f"{name}.jobs"] = a["jobs"]
+    w0, w1 = window
+    for k, v in trace.sum_jobs([j for j in jobs if w0 <= j["submitted"] <= w1]).items():
+        out[f"spark.{k}"] = v
+    out.update(wl.layer_counters(spans))
     return out

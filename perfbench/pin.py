@@ -1,13 +1,14 @@
 """Rebuild ``pins.json``: the expected results every run compares against.
 
-For each scale factor it records, on the benchmark's own base tables,
-(row count, digest) of every ``keys`` key and (row count, result hash) of
-every replay template instance. Each pin is checked first against the
+For each scale factor of a run it records, on the benchmark's own base
+tables, (row count, digest) of every ``keys`` key at the scale factor the
+key runs at (heavy keys run on smaller tables) and (row count, result
+hash) of every replay template instance. Each pin is checked first against the
 DuckDB oracle twin where one exists: a key against its registered oracle
 SQL with the engine's parity rules, a replay instance by running the same
 statement and the twin of ``result_hash`` in DuckDB. A mismatch aborts.
 
-Usage (from the repository root; about two minutes on 4 cores):
+Usage (from the repository root; about four minutes on 4 cores):
 
     python3 perfbench/pin.py
 """
@@ -35,15 +36,15 @@ def _duckdb(sf_dir: str):
     return con
 
 
-def pin_keys(spark, sf_dir: str) -> dict:
+def pin_keys(spark, sf_dir: str, keys: list[str]) -> dict:
     from dodo_spark import registry
-    from perfbench.keys import KEYS, digest
+    from perfbench.keys import digest
     from tests.parity import assert_parity, run_oracle
 
     registry.queries()
     con = _duckdb(sf_dir)
     out = {}
-    for key in KEYS:
+    for key in keys:
         spec = registry.REGISTRY[key]
         df = spec.fn(spark, sf_dir)
         rows = df.collect()
@@ -83,6 +84,7 @@ def pin_replay(spark, sf_dir: str) -> dict:
 def main() -> int:
     sys.path.insert(0, ROOT)
     from perfbench import inputs
+    from perfbench.keys import KEYS, key_sf
     from perfbench.run import STATE, _configure_env, _stop_spark
 
     from dodo_spark.catalog import register_views
@@ -97,12 +99,17 @@ def main() -> int:
 
         spark = get_spark("perfbench-pin")
         spark.sparkContext.setLogLevel("ERROR")
+        at: dict[float, set[str]] = {}  # scale factor -> keys that run at it
         for sf in SCALES:
+            for key in KEYS:
+                at.setdefault(key_sf(key, sf), set()).add(key)
+        for sf in sorted(at, reverse=True):
             sf_dir = inputs.data_dir(STATE, sf)
             print(f"sf{sf:g}:", flush=True)
-            register_views(spark, sf_dir)
-            pins["keys"][f"{sf:g}"] = pin_keys(spark, sf_dir)
-            pins["replay"][f"{sf:g}"] = pin_replay(spark, sf_dir)
+            pins["keys"][f"{sf:g}"] = pin_keys(spark, sf_dir, sorted(at[sf]))
+            if sf in SCALES:
+                register_views(spark, sf_dir)
+                pins["replay"][f"{sf:g}"] = pin_replay(spark, sf_dir)
     finally:
         if spark is not None:
             _stop_spark(spark)

@@ -2,10 +2,16 @@
 
 Usage (from the repository root):
 
-    python3 perfbench/run.py --workload replay --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload replay --seed 1 --seconds 25 --trace 0
+
+A run is one cold set-up (a fresh JVM: session start, warm-up query, the
+workload's inputs) and one pass of the workload, whose size is fixed by
+constants, so every run at every seed does the same amount of work.
+``--seconds`` is the nominal length of that pass; it is recorded in the
+report and sizes nothing.
 
 ``--trace 0`` measures the end-to-end metrics with tracing off. ``--trace 1``
-runs the same cycles with tracing on and prints the per-layer metrics, the
+runs the same pass with tracing on and prints the per-layer metrics, the
 spans and the tracing overhead: ``trace.overhead_s`` is the time spent
 recording spans and tagging jobs, and ``trace.wall_s`` minus the ``wall_s``
 of an untraced run at the same seed is the whole gap.
@@ -34,7 +40,6 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 STATE = os.path.join(ROOT, ".perfbench")
-SETUP_REPEATS = 3
 WORKLOADS = ("replay", "versioned", "keys")
 
 # end-to-end metrics every workload reports, with their units: the ones the
@@ -120,67 +125,51 @@ def run(args: argparse.Namespace) -> dict:
         "canary_ms_start": trace.canary_ms(),
     }
     os.makedirs(STATE, exist_ok=True)
-    sf_dir = inputs.data_dir(STATE, args.sf)
     tmp = tempfile.mkdtemp(prefix="run-", dir=STATE)
     spark = None
     try:
         _configure_env(tmp, cpus)
-        from dodo_spark.catalog import register_views
         from dodo_spark.session import get_spark
 
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "pins.json")) as f:
             pins = json.load(f)
-        ctx = {"seed": args.seed, "sf": args.sf, "sf_dir": sf_dir, "tmp": tmp, "cpus": cpus,
-               "pins": pins, "seconds": args.seconds}
+        ctx = {"seed": args.seed, "sf": args.sf, "tmp": tmp, "cpus": cpus, "pins": pins}
         wl = _make_workload(args.workload, ctx)
+        # the base tables are a build product, made before set-up is timed
+        ctx["dirs"] = {sf: inputs.data_dir(STATE, sf) for sf in wl.scales}
 
-        # set-up, repeated: session start, warm-up, the workload's inputs
-        setups, starts, warmups = [], [], []
-        for i in range(SETUP_REPEATS):
-            t0 = time.perf_counter()
-            spark = get_spark("perfbench", cpus=cpus)
-            spark.sparkContext.setLogLevel("ERROR")
-            t1 = time.perf_counter()
-            register_views(spark, sf_dir)
-            spark.sql("SELECT count(*), sum(l_quantity) FROM lineitem").collect()
-            t2 = time.perf_counter()
-            wl.prepare(spark)
-            setups.append(time.perf_counter() - t0)
-            starts.append(t1 - t0)
-            warmups.append(t2 - t1)
-            if i < SETUP_REPEATS - 1:
-                spark.stop()
+        # set-up, cold: session start, warm-up query, the workload's inputs
+        t0 = time.perf_counter()
+        spark = get_spark("perfbench", cpus=cpus)
+        spark.sparkContext.setLogLevel("ERROR")
+        t1 = time.perf_counter()
+        spark.range(1000).selectExpr("sum(id)").collect()  # the session's first job
+        t2 = time.perf_counter()
+        wl.prepare(spark)
+        setup_s = time.perf_counter() - t0
 
-        n = max(1, round(args.seconds / wl.cycle_s))
         tracer = trace.Tracer(spark, bool(args.trace))
-        walls: list[float] = []
-        ops: list[tuple[str, float, bool]] = []
-        outcomes: list[bool] = []  # every op and check of every cycle
-        windows = []
-        for i in range(n):
-            w0 = time.time()
-            res = wl.cycle(spark, tracer, i)
-            windows.append((w0, time.time()))
-            walls.append(res["wall_s"])
-            ops.extend(res["ops"])
-            outcomes.extend(o[2] for o in res["ops"])
-            outcomes.extend(res.get("checks", []))
+        w0 = time.time()
+        res = wl.run(spark, tracer)
+        window = (w0, time.time())
+        ops = res["ops"]
+        outcomes = [o[2] for o in ops] + res.get("checks", [])
 
         lat = [o[1] for o in ops]
         failed = outcomes.count(False)
         attempted = len(outcomes)
         e2e = {
-            "setup_s": statistics.median(setups),
-            "wall_s": statistics.median(walls),
-            "ops_per_s": len(ops) / sum(walls),
+            "setup_s": setup_s,
+            "wall_s": res["wall_s"],
+            "ops_per_s": len(ops) / res["busy_s"],
             "op_p50_ms": trace.percentile(lat, 0.5) * 1000,
             "op_p90_ms": trace.percentile(lat, 0.9) * 1000,
             "op_geomean_ms": math.exp(statistics.fmean(math.log(max(x, 1e-6)) for x in lat)) * 1000,
             "peak_rss_mb": trace.peak_rss_mb(spark),
         }
         report.update(
-            cycles=n, traced=bool(args.trace), ops=len(ops), failed_ratio=failed / max(attempted, 1),
-            setup_s_each=[round(s, 4) for s in setups],
+            seconds=args.seconds, traced=bool(args.trace), ops=len(ops),
+            failed_ratio=failed / max(attempted, 1),
             workload_metrics=wl.report(ops),
             end_to_end={k: {"value": v, "unit": REPORTED[k]} for k, v in e2e.items()},
         )
@@ -188,11 +177,11 @@ def run(args: argparse.Namespace) -> dict:
             from perfbench import layers
 
             jobs = trace.spark_jobs(spark)
-            per_layer = layers.per_layer(wl, tracer, jobs, windows)
-            per_layer["session.start_s"] = statistics.median(starts)
-            per_layer["session.warmup_s"] = statistics.median(warmups)
-            per_layer["trace.overhead_s"] = tracer.cost_s / n
-            per_layer["trace.wall_s"] = statistics.median(walls)
+            per_layer = layers.per_layer(wl, tracer, jobs, window)
+            per_layer["session.start_s"] = t1 - t0
+            per_layer["session.warmup_s"] = t2 - t1
+            per_layer["trace.overhead_s"] = tracer.cost_s
+            per_layer["trace.wall_s"] = res["wall_s"]
             metrics = {k: {"value": v, "unit": layers.UNITS[k]} for k, v in sorted(per_layer.items())}
             print(json.dumps({"spans": tracer.spans}))
         else:
@@ -210,7 +199,8 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--seconds", type=float, default=20.0)
+    ap.add_argument("--seconds", type=float, default=25.0,
+                    help="nominal length of the measured pass; recorded, sizes nothing")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--sf", type=float, default=0.1, help="scale factor of the base tables")
     args = ap.parse_args(argv)

@@ -44,10 +44,13 @@ def test_base_tables_are_reproducible():
 
 
 def test_audit_log_mix_is_fixed():
+    marker = inputs.TRUNCATION_MARKER.split("{n}")[1]
     for seed in (1, 2):
         text, expected = inputs.audit_log(seed)
         assert text.count("|QueryId=") == sum(inputs.LOG_MIX.values()) >= 300
         assert len(expected) == inputs.LOG_MIX["kept"]
+        # truncated records use the audit plugin's marker and the bare form
+        assert 0 < text.count(marker + "|CpuTimeMS") < inputs.LOG_MIX["truncated"]
 
 
 def test_commit_plan_never_rewrites_under_a_live_deletion_vector():
@@ -71,8 +74,10 @@ def test_key_layers_are_the_registering_modules():
     from dodo_spark import registry
 
     registry.queries()
-    for key, module in KEYS.items():
+    for key, (module, _heavy) in KEYS.items():
         assert registry.REGISTRY[key].fn.__module__ == f"dodo_spark.operators.{module}"
+    # one key for every operator module that has a read-only headline key
+    assert len({m for m, _h in KEYS.values()}) == len(KEYS)
 
 
 @pytest.mark.parametrize("trace", [0, 1])
@@ -136,8 +141,8 @@ def spark():
 
 
 def _ctx(tmp: str, pins: dict) -> dict:
-    return {"seed": 5, "sf": 0.001, "sf_dir": inputs.data_dir(run.STATE, 0.001), "tmp": tmp,
-            "cpus": 2, "pins": pins, "seconds": 1}
+    return {"seed": 5, "sf": 0.001, "dirs": {0.001: inputs.data_dir(run.STATE, 0.001)}, "tmp": tmp,
+            "cpus": 2, "pins": pins}
 
 
 def _pins() -> dict:
@@ -156,7 +161,7 @@ def test_corrupted_key_pin_counts_as_a_failure(spark):
     for p, want_failed in ((pins, set()), (bad, {"join_inner"})):
         wl = Keys(_ctx(tmp, p))
         wl.prepare(s)
-        res = wl.cycle(s, Tracer(s, False), 0)
+        res = wl.run(s, Tracer(s, False))
         assert {k for k, _dt, ok in res["ops"] if not ok} == want_failed
 
 
@@ -170,7 +175,7 @@ def test_corrupted_replay_pin_counts_as_a_failure(spark):
     wl.prepare(s)
     inst = next(iter(wl.expected.values()))
     bad["replay"]["0.001"][inst]["hash"] += 1
-    res = wl.cycle(s, Tracer(s, False), 0)
+    res = wl.run(s, Tracer(s, False))
     failed = sum(1 for _k, _dt, ok in res["ops"] if not ok)
     assert failed == sum(1 for v in wl.expected.values() if v == inst) >= 1
     assert all(res["checks"])

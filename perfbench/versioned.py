@@ -1,11 +1,13 @@
 """``versioned`` workload: gendata, then a seeded commit/read stream.
 
-Each cycle generates the source rows with ``GendataPlan.generate`` from a
+A run generates the source rows with ``GendataPlan.generate`` from a
 benchmark-owned DDL and a seeded genconf and writes them to parquet (the
 ``dodo gendata`` verb, timed), commits them as version 0 of a fresh table,
 then runs one closed-loop client over the seeded commit plan: every commit
 is followed by one read. The stream is the only load that writes and grows
-table metadata (manifests, small files).
+table metadata (manifests, small files). ``wall_s`` covers gendata and the
+stream; ``busy_s``, the time the operations themselves take, is the
+commits and reads alone.
 
 Correctness is checked against a model of the table kept in Python: the
 physical rows, the ids masked by live deletion vectors, and the (count,
@@ -25,7 +27,7 @@ import traceback
 from perfbench import inputs
 
 SOURCE_ROWS = 20_000
-UNIT_SECONDS = 15  # one unit of the commit plan (12 commits, 12 reads) per this many --seconds
+UNITS = 1  # units of the commit plan per run: 6 commits after version 0, 6 reads
 HASH_MOD = 1 << 48
 COLUMNS = ("id", "grp", "amount", "tag")
 SCHEMA = "id BIGINT, grp INT, amount BIGINT, tag STRING"
@@ -117,22 +119,21 @@ class Versioned:
     def __init__(self, ctx: dict) -> None:
         self.ctx = ctx
         self.rows = SOURCE_ROWS if ctx["sf"] >= 0.1 else 2_000
-        self.units = max(1, round(ctx["seconds"] / UNIT_SECONDS))
-        self.cycle_s = ctx["seconds"]  # one cycle per run; --seconds sizes its plan
+        self.scales = set()  # writes its own table; reads no base table
         self.counters = {"skipped": 0, "candidates": 0, "bytes": 0, "live_files": 0, "commits": 0}
         self.last = {}
 
     def prepare(self, spark) -> None:
         self.conf = inputs.genconf(self.ctx["seed"], self.rows)
+        self.plan = inputs.commit_plan(self.ctx["seed"], self.rows, UNITS)
 
-    def cycle(self, spark, tracer, i: int) -> dict:
+    def run(self, spark, tracer) -> dict:
         from dodo_spark.gendata.plan import GendataPlan
         from dodo_spark.sources import mor
         from dodo_spark.sources import versioned as V
 
-        seed = self.ctx["seed"] + 7919 * i
-        plan = inputs.commit_plan(seed, self.rows, self.units)
-        out = os.path.join(self.ctx["tmp"], f"cycle-{i}")
+        plan = self.plan
+        out = os.path.join(self.ctx["tmp"], "versioned-run")
         table = os.path.join(out, "accounts")
         ops: list[tuple[str, float, bool]] = []
         checks: list[bool] = []
@@ -185,13 +186,10 @@ class Versioned:
         data_bytes = sum(os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(table)
                          for f in fs if f.endswith(".parquet"))
         live = len(V.live_files(table, len(plan)))
-        if tracer.enabled:
-            c = self.counters
-            c["bytes"] += data_bytes
-            c["live_files"] += live
-            c["commits"] += len(plan) + 1
+        self.counters.update(bytes=data_bytes, live_files=live, commits=len(plan) + 1)
         self.last = {"gendata_s": gen_s, "bytes_per_user_byte": data_bytes / user_bytes}
-        return {"ops": ops, "checks": checks, "wall_s": gen_s + sum(o[1] for o in ops)}
+        busy = sum(o[1] for o in ops)
+        return {"ops": ops, "checks": checks, "wall_s": gen_s + busy, "busy_s": busy}
 
     def _read(self, spark, tracer, V, mor, table: str, v: int, op: dict, model: Model):
         kind = op["read"]
@@ -271,7 +269,7 @@ class Versioned:
             "reads": {"value": len(reads), "unit": "count"},
         }
 
-    def layer_counters(self, spans: dict, n: int) -> dict:
+    def layer_counters(self, spans: dict) -> dict:
         from perfbench.layers import COMMITS
 
         c = self.counters
@@ -279,6 +277,6 @@ class Versioned:
         return {
             "sources.versioned.jobs_per_commit": commit_jobs / max(c["commits"], 1),
             "sources.versioned.files_skipped_ratio": c["skipped"] / max(c["candidates"], 1),
-            "sources.versioned.bytes_written": c["bytes"] / n,
-            "sources.versioned.live_files": c["live_files"] / n,
+            "sources.versioned.bytes_written": c["bytes"],
+            "sources.versioned.live_files": c["live_files"],
         }
