@@ -1,29 +1,17 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+   "cpus": ...}
 
 The per-query number is the MEDIAN of $SPARK_GRAFT_BENCH_RUNS (default 3)
 wall-clock runs — plan + execution + driver-side collect of the
 already-small result — so a one-off GC/compilation hiccup doesn't read as
 a regression at ~1 s granularity. A warmup query runs first so
-JVM/codegen startup isn't billed to the first key.
-
-CONTENTION DE-NOISING (round-8 verdict ask: the driver's shared box cost
-~19% vs the solo sidecar and manufactured phantom regressions): after the
-main pass, any key slower than CONTENTION_RATIO x its time in the newest
-committed BENCH_LOCAL_r*.json sidecar (same sf only) is RE-RUN once and
-the better median wins; keys still over the ratio are flagged in the
-payload's "contended" map with both numbers, and 1-min loadavg is
-recorded at start/end — so a contended run carries its own evidence
-instead of reading as a code regression.
-
-Round-9 advisor hardening: EVERY re-run key records (first_pass, rerun,
-solo_sidecar) in the payload's "reruns" map — not only still-contended
-ones — so the min() de-noising is auditable cross-round and cannot
-silently ratchet the sidecar baseline downward; and the ratio is 1.15
-(the round-8 "Done" criterion), so any key >15% over the solo sidecar
-either recovers on the re-run or carries a flag.
+JVM/codegen startup isn't billed to the first key. The line also records
+the git head, the session's core count and the 1-min loadavg: compare its
+numbers only with a line taken on the same box and core count. Nothing is
+written to disk; `perfbench/run.py` is the gated benchmark.
 """
 
 from __future__ import annotations
@@ -204,88 +192,6 @@ HEADLINE = [
 ]
 
 
-CONTENTION_RATIO = 1.15
-
-# Per-key yardstick baseline reset (round-12 advisor): the min-across-all-
-# sidecars baseline never ages out, so a kernel INTENTIONALLY rewritten to
-# be slower (a correctness fix or a trade-off) would exceed the stale
-# historical best forever — one wasted re-run + a misleading "contended"
-# flag every round. When that happens, map the key to the first sidecar
-# round whose number reflects the NEW kernel; older sidecars are ignored
-# for that key.
-#
-# r13: the audit-log extractor gained a hostile-input pre-clean (NUL/US
-# strip before the group splice — sources/auditlog.py extract_statements),
-# a deliberate ~10-20% cost on the two keys that scan the log corpus; the
-# cheapest correct form was chosen by interleaved A/B (see the kernel
-# comment). Pre-r13 sidecar minima time the UNHARDENED kernel.
-BASELINE_RESET: dict[str, int] = {
-    "auditlog_extract": 13,
-    "query_filter_dedup": 13,
-}
-
-
-def _sidecar_query_seconds(v) -> float:
-    """One query entry from a committed sidecar -> comparable seconds.
-
-    WRITTEN form (this file, stable since r8): ``queries`` values are flat
-    floats (median of runs, post-de-noising). Two HISTORIC dict forms also
-    exist in committed artifacts and in the driver-recorded stdout tails:
-    the ``reruns``/``contended`` maps' ``{first_pass, rerun, solo_sidecar}``
-    records. If a ``queries`` value ever arrives as such a dict (a format
-    merge, or a reader pointed at the wrong map), the comparable number is
-    min(first_pass, rerun) — what the measured code actually ran on that
-    box; ``solo_sidecar`` is another round's yardstick, never a
-    measurement of that artifact's code. Returns -1.0 for junk."""
-    if isinstance(v, dict):
-        passes = [
-            float(v[k]) for k in ("first_pass", "rerun")
-            if isinstance(v.get(k), (int, float))
-        ]
-        return min(passes) if passes else -1.0
-    try:
-        return float(v)
-    except (TypeError, ValueError):
-        return -1.0
-
-
-def _reference_timings(sf: float) -> dict[str, float]:
-    """Per-key BEST (min) across ALL committed solo sidecars
-    (BENCH_LOCAL_r*.json) at the SAME scale factor, used as the
-    contention yardstick. Min-across-rounds, not newest-round: the
-    round-12 bisect showed the newest-sidecar yardstick RATCHETS — one
-    contended round records a slow number, the next round compares
-    against that slower baseline, never re-runs, and the slow level
-    persists as a phantom regression (join_partition_pruned et al.,
-    r9->r11). Comparing against the historical best means a key that was
-    ever faster on this box keeps earning a re-run until it recovers or
-    flags — one bounded extra median per slow key. Missing/mismatched
-    sidecars -> {} (no de-noising, plain measurement)."""
-    import glob
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    best: dict[str, float] = {}
-    for p in glob.glob(os.path.join(root, "BENCH_LOCAL_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", p)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(p) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if data.get("sf") != sf:
-            continue
-        for k, v in (data.get("queries") or {}).items():
-            if rnd < BASELINE_RESET.get(k, 0):
-                continue  # kernel deliberately changed; pre-reset is stale
-            s = _sidecar_query_seconds(v)
-            if s > 0 and (k not in best or s < best[k]):
-                best[k] = s
-    return best
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -323,30 +229,9 @@ def main() -> None:
         if name in all_queries:
             timings[name] = measure(name)
 
-    # contention pass: keys slower than CONTENTION_RATIO x the committed
-    # solo sidecar re-run once (better median wins); still-slow keys are
-    # FLAGGED with both numbers so a noisy shared box reads as noise,
-    # not as a code regression
-    ref = _reference_timings(sf)
-    contended: dict[str, dict] = {}
-    reruns: dict[str, dict] = {}
-    for name, t in sorted(timings.items()):
-        r = ref.get(name)
-        if r is None or r <= 0 or t <= CONTENTION_RATIO * r:
-            continue
-        rerun = measure(name)
-        timings[name] = min(t, rerun)
-        # audit trail for EVERY re-run (round-9 advisor): the min() that
-        # wins is visible next to both raw passes, so cross-round readers
-        # can see exactly when de-noising picked the faster number
-        reruns[name] = {"solo_sidecar": r, "first_pass": t, "rerun": rerun}
-        if timings[name] > CONTENTION_RATIO * r:
-            contended[name] = reruns[name]
-
     def git_head() -> str:
-        """Git sha of the measured tree (+dirty marker), so a committed
-        sidecar proves WHICH code it timed — the r11 sidecar predated two
-        late-pass optimizations and nothing in the artifact said so."""
+        """Git sha of the measured tree (+dirty marker), so the line
+        proves WHICH code it timed."""
         import subprocess
 
         try:
@@ -382,27 +267,10 @@ def main() -> None:
         "queries": dict(sorted(timings.items())),
         "sf": sf,
         "runs_per_query": runs,
+        "cpus": spark.sparkContext.defaultParallelism,
         "loadavg_1m": {"start": loadavg_start, "end": loadavg_1m()},
-        "contention_ratio": CONTENTION_RATIO,
-        "contended": contended,
-        "reruns": reruns,
     }
     print(json.dumps(payload))
-    # full, never-truncated sidecar for cross-round regression tracking;
-    # committed per-round as BENCH_LOCAL_r{N}.json. Non-default scales
-    # write an sf-suffixed scratch name: a verify-scale run (sf0.01 CLI
-    # check) at the default name CLOBBERED the round-13 try-2 solo
-    # sidecar before it was committed — the tracked sf0.1 artifact must
-    # never share a filename with throwaway scales.
-    try:
-        name = "BENCH_LOCAL.json" if sf == 0.1 else f"BENCH_LOCAL_sf{sf}.json"
-        out = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), name
-        )
-        with open(out, "w") as f:
-            json.dump(payload, f, indent=1, sort_keys=True)
-    except OSError:
-        pass  # sidecar is best-effort; the stdout line is the contract
     spark.stop()
 
 

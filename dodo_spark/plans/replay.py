@@ -125,14 +125,23 @@ def replay_statements(
 
     _DONE = object()
 
-    def run_client(client: str, q: queue.Queue) -> list[ReplayResult]:
+    def run_client(client: str, q: queue.Queue, start_ts: str | None) -> list[ReplayResult]:
         """Worker loop. EVERY per-statement step (pacing-gap parse, execute,
         capture, timing bookkeeping) sits inside a try: a malformed ts or
         NULL duration becomes an err row on that statement, never a dead
         worker — a dead worker would silently drop the whole client's
-        results and deadlock the dispatcher once its bounded queue fills."""
+        results and deadlock the dispatcher once its bounded queue fills.
+
+        With ``speed`` set, the client's first statement is paced from the
+        corpus start ``start_ts`` with zero prior duration (reference
+        ``prevTs = c.minTs``, src/replay.go:221; ``replay_schedule``)."""
         out = []
         prev_ts = prev_dur = None
+        if speed:
+            try:
+                prev_ts, prev_dur = parse_ts(start_ts), 0.0
+            except (TypeError, ValueError):
+                pass  # unusable corpus start: the first statement runs at once
         while True:
             r = q.get()
             if r is _DONE:
@@ -209,13 +218,18 @@ def replay_statements(
     stream = decoded.select("ts", "client", "query_id", "duration_ms", "stmt").orderBy(
         "ts", "query_id"
     )
+    start_ts = None  # first non-null ts of the ts-sorted stream: the corpus min
     for r in stream.toLocalIterator(prefetchPartitions=True):
+        if start_ts is None:
+            start_ts = r["ts"]
         client = r["client"]
         if client not in workers:
             q: queue.Queue = queue.Queue(maxsize=max(1, queue_depth))
             holder: list = []
             t = threading.Thread(
-                target=lambda q=q, c=client, h=holder: h.extend(run_client(c, q)),
+                target=lambda q=q, c=client, h=holder, s=start_ts: h.extend(
+                    run_client(c, q, s)
+                ),
                 daemon=True,
             )
             t.start()

@@ -171,8 +171,7 @@ def extract_statements(records: DataFrame, record_col: str = "record") -> DataFr
     # translate ~5.0-5.9s (Spark's per-codepoint map loses to Java's
     # compiled 2-char class), contains-guarded when() ~6.0-6.4s (the guard
     # duplicates into every consumer). Unguarded regexp costs ~10-20% over
-    # no strip on clean data — the price of never shearing on hostile data;
-    # bench.py BASELINE_RESET pins r13 as these keys' yardstick epoch.
+    # no strip on clean data — the price of never shearing on hostile data.
     c = F.regexp_replace(F.col(record_col), "[\x00\x1f]", "")
     # barrier #1 (round-13 optimization): a one-element explode pins the
     # pre-clean AND the rlike match predicate ABOVE any upstream exchange.

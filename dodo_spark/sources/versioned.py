@@ -1061,14 +1061,11 @@ def _apply_event_to_schema(schema, extra: dict):
 # Driver-side fast path for SMALL commit writes (r14 optimization, guide
 # §5/§6): a full distributed write job costs ~0.2 s of scheduling +
 # committer + writer-init for a state-sized frame that a single pyarrow
-# write handles in ~5 ms after a ~50 ms Arrow collect. The bounds are
-# env-parameterized; at warehouse scale the bounds simply never qualify
-# (the footer row/byte budget of the frame's input scan exceeds them)
-# and every write stays distributed.
-_SMALL_COMMIT_ROWS = int(os.environ.get("DODO_SMALL_COMMIT_ROWS", "200000"))
-_SMALL_COMMIT_INPUT_BYTES = int(
-    os.environ.get("DODO_SMALL_COMMIT_INPUT_BYTES", str(64 * 1024 * 1024))
-)
+# write handles in ~5 ms after a ~50 ms Arrow collect. At warehouse
+# scale the bounds simply never qualify (the footer row/byte budget of
+# the frame's input scan exceeds them) and every write stays distributed.
+_SMALL_COMMIT_ROWS = 200_000
+_SMALL_COMMIT_INPUT_BYTES = 64 * 1024 * 1024
 
 # logical-plan node names that can only PRESERVE or REDUCE row count, so
 # "sum of input-file footer rows" is a sound upper bound for the frame.
@@ -1088,8 +1085,8 @@ _ROW_BOUND_SAFE_NODES = frozenset(
         "Window",
         "GlobalLimit",
         "LocalLimit",
-        "Union",  # inputFiles() returns the union of leaf files
-        "Sample",
+        "Union",  # sum of its inputs; each scan leaf is counted (below)
+        "Sample",  # only without replacement (checked below)
         "Relation",
         "LogicalRelation",
     }
@@ -1125,28 +1122,37 @@ def scan_rows_bound(df: DataFrame) -> int | None:
 
     Sound only when every operator in the optimized logical plan is
     row-preserving/reducing (whitelist above) over plain local file
-    scans: then rows(df) <= sum of the input files' footer num_rows.
-    Multiplying or opaque nodes (joins, explode, checkpoints) return
-    None. Also returns None when the inputs exceed the small-commit byte
-    budget — a bound that large is useless to the fast path and the
-    footer sweep would be wasted work. Callers holding a frame whose
-    scan is hidden behind a localCheckpoint can call this BEFORE the
-    checkpoint and pass the bound through explicitly."""
+    scans: then rows(df) <= leaves x sum of the input files' footer
+    num_rows, where leaves is the number of scan nodes — inputFiles()
+    dedups, so a self-union reads the same files once per leaf.
+    Multiplying or opaque nodes (joins, explode, checkpoints, sampling
+    with replacement) return None. Also returns None when the inputs
+    exceed the small-commit byte budget — a bound that large is useless
+    to the fast path and the footer sweep would be wasted work. Callers
+    holding a frame whose scan is hidden behind a localCheckpoint can
+    call this BEFORE the checkpoint and pass the bound through
+    explicitly."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     except Exception:  # noqa: BLE001 — probe is best-effort
         return None
+    leaves = 0
     for line in plan.splitlines():
-        m = re.match(r"^[\s:+|-]*([A-Za-z]+)", line)
+        m = re.match(r"^[\s:+|-]*([A-Za-z]+)(.*)", line)
         if not m:
             continue  # argument continuation / blank line
-        if m.group(1) not in _ROW_BOUND_SAFE_NODES:
+        node, args = m.groups()
+        if node not in _ROW_BOUND_SAFE_NODES:
             return None
+        if node in ("Relation", "LogicalRelation"):
+            leaves += 1
+        elif node == "Sample" and args.split(",")[2:3] != [" false"]:
+            return None  # args: lower, upper, withReplacement, seed
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001
         return None
-    if not files:
+    if not files or not leaves:
         return None
     total_rows = 0
     total_bytes = 0
@@ -1162,9 +1168,9 @@ def scan_rows_bound(df: DataFrame) -> int | None:
             total_bytes += os.path.getsize(lp)
         except OSError:
             return None
-    if total_bytes > _SMALL_COMMIT_INPUT_BYTES:
+    if leaves * total_bytes > _SMALL_COMMIT_INPUT_BYTES:
         return None
-    return total_rows
+    return leaves * total_rows
 
 
 def _files_rows_bound(table_path: str, files: list[str]) -> int | None:
@@ -1205,7 +1211,7 @@ def _write_data_files(
     ``compact_files`` whose MULTI-file output is the product, and by
     callers that know the frame is large).
 
-    SMALL frames (bound within the env budgets, local table path) are
+    SMALL frames (bound within the small-commit budgets, local path) are
     collected as ONE Arrow batch and written as a single parquet file by
     the driver. Task-retry / zombie-writer safety is unchanged from the
     distributed path: the driver write has no task retries at all (one

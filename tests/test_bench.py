@@ -1,115 +1,35 @@
-"""bench.py's contention de-noising (round-8 verdict ask #5)."""
+"""bench.py's output contract: one JSON line on stdout, nothing on disk."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+KEYS = ["agg_group", "join_inner"]
 
 
-def test_reference_timings_takes_per_key_min_across_sidecars(tmp_path, monkeypatch):
-    """Round-12: the yardstick is the per-key BEST across ALL same-sf
-    sidecars, not the newest round — the newest-sidecar rule let one
-    contended round ratchet the baseline downward permanently (the r9->r11
-    join_partition_pruned phantom regression; PLAN_AUDIT round-12 note)."""
-    import bench
+def test_bench_prints_one_json_line_and_writes_no_sidecar(sf_dir):
+    # a subprocess, because main() stops its session
+    def sidecars():
+        pattern = os.path.join(ROOT, "BENCH_LOCAL*.json")
+        return {p: os.stat(p).st_mtime_ns for p in glob.glob(pattern)}
 
-    def sidecar(rnd, sf, queries):
-        with open(tmp_path / f"BENCH_LOCAL_r{rnd}.json", "w") as f:
-            json.dump({"sf": sf, "queries": queries}, f)
-
-    sidecar(3, 0.1, {"agg_group": 1.0})
-    # a later, slower round must NOT replace the r3 best for agg_group
-    sidecar(5, 0.1, {"agg_group": 2.0, "join_inner": 0.5})
-    sidecar(7, 0.01, {"agg_group": 9.0})  # wrong sf: never the yardstick
-    sidecar(8, 0.1, {"join_inner": 0.4, "zeroed": 0.0})  # 0s are skipped
-    with open(tmp_path / "BENCH_LOCAL_rX.json", "w") as f:
-        f.write("not json")  # malformed names/content are skipped
-
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-    assert bench._reference_timings(0.1) == {
-        "agg_group": 1.0,
-        "join_inner": 0.4,
-    }
-    assert bench._reference_timings(0.01) == {"agg_group": 9.0}
-    assert bench._reference_timings(1.0) == {}  # no sidecar at that sf
-
-
-def test_contention_flagging_logic():
-    """The re-run/flag arithmetic bench.main applies: a key over
-    ratio x sidecar re-runs and keeps the better median; EVERY re-run
-    key lands in the reruns audit map (round-9 advisor — the min() that
-    wins must be auditable cross-round), and keys STILL over the ratio
-    are additionally flagged as contended."""
-    import bench
-
-    assert bench.CONTENTION_RATIO == 1.15  # the round-8 "Done" criterion
-
-    ref = {"a": 1.0, "b": 1.0, "c": 1.0}
-    timings = {"a": 1.1, "b": 2.0, "c": 2.0, "d": 5.0}  # d: no yardstick
-    rerun_times = {"b": 0.9, "c": 1.9}  # b recovers solo-speed, c stays slow
-    contended = {}
-    reruns = {}
-    for name, t in sorted(timings.items()):
-        r = ref.get(name)
-        if r is None or r <= 0 or t <= bench.CONTENTION_RATIO * r:
-            continue
-        rerun = rerun_times[name]
-        timings[name] = min(t, rerun)
-        reruns[name] = {"solo_sidecar": r, "first_pass": t, "rerun": rerun}
-        if timings[name] > bench.CONTENTION_RATIO * r:
-            contended[name] = reruns[name]
-    assert timings == {"a": 1.1, "b": 0.9, "c": 1.9, "d": 5.0}
-    # b's masking min() is auditable even though it is no longer flagged
-    assert reruns == {
-        "b": {"solo_sidecar": 1.0, "first_pass": 2.0, "rerun": 0.9},
-        "c": {"solo_sidecar": 1.0, "first_pass": 2.0, "rerun": 1.9},
-    }
-    assert contended == {
-        "c": {"solo_sidecar": 1.0, "first_pass": 2.0, "rerun": 1.9}
-    }
-
-
-def test_sidecar_query_seconds_reads_both_historic_forms():
-    """Round-13 format unification: committed sidecars carry flat floats in
-    "queries" (the written form), while the reruns/contended maps — and any
-    driver tail that recorded them — use {first_pass, rerun, solo_sidecar}
-    dicts. The yardstick reader must accept BOTH: for a dict the comparable
-    number is min(first_pass, rerun) — what the measured code actually ran;
-    solo_sidecar is ANOTHER round's yardstick, never this artifact's
-    measurement. Junk returns -1.0 (skipped by the >0 gate)."""
-    import bench
-
-    assert bench._sidecar_query_seconds(1.25) == 1.25
-    assert bench._sidecar_query_seconds("2.5") == 2.5
-    assert bench._sidecar_query_seconds(
-        {"first_pass": 2.0, "rerun": 1.5, "solo_sidecar": 0.1}
-    ) == 1.5
-    assert bench._sidecar_query_seconds({"first_pass": 2.0}) == 2.0
-    assert bench._sidecar_query_seconds({"solo_sidecar": 0.9}) == -1.0
-    assert bench._sidecar_query_seconds(None) == -1.0
-    assert bench._sidecar_query_seconds("junk") == -1.0
-
-
-def test_reference_timings_dict_form_and_baseline_reset(tmp_path, monkeypatch):
-    """A dict-valued queries entry no longer crashes (pre-r13: float(dict)
-    raised) and contributes min(first_pass, rerun); and BASELINE_RESET
-    ages out pre-reset sidecar rounds for a key whose kernel was
-    deliberately slowed (round-12 advisor: the min-across-rounds yardstick
-    otherwise never forgets old-code minima)."""
-    import json
-
-    import bench
-
-    def sidecar(rnd, queries):
-        with open(tmp_path / f"BENCH_LOCAL_r{rnd}.json", "w") as f:
-            json.dump({"sf": 0.1, "queries": queries}, f)
-
-    sidecar(3, {"k": 0.5, "d": {"first_pass": 1.0, "rerun": 0.8,
-                                "solo_sidecar": 0.1}})
-    sidecar(5, {"k": 2.0, "d": 0.9})
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-
-    assert bench._reference_timings(0.1) == {"k": 0.5, "d": 0.8}
-    # kernel of "k" deliberately rewritten between r3 and r5: drop r3's best
-    monkeypatch.setattr(bench, "BASELINE_RESET", {"k": 5})
-    assert bench._reference_timings(0.1) == {"k": 2.0, "d": 0.8}
+    before = sidecars()
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
+               SPARK_GRAFT_CPUS="2", SPARK_GRAFT_BENCH_RUNS="1")
+    code = f"import bench; bench.HEADLINE[:] = {KEYS!r}; bench.main()"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, env=env,
+        capture_output=True, text=True, timeout=600, check=True,
+    ).stdout
+    lines = [ln for ln in out.splitlines() if ln.strip()]
+    assert len(lines) == 1, out
+    payload = json.loads(lines[0])
+    assert {"metric", "value", "unit", "queries", "sf", "cpus"} <= set(payload)
+    assert sorted(payload["queries"]) == KEYS
+    assert payload["cpus"] == 2
+    assert sidecars() == before

@@ -18,7 +18,8 @@ from dodo_spark.gendata.plan import GendataPlan, example_plan
 def test_all_types_generate(spark):
     """74-column all-types DDL yields one generator per column and exactly
     `rows` rows (reference src/gendata_test.go:18-116)."""
-    ddl = open("/root/reference/example/ddl/test.all_type_nullable.table.sql").read()
+    path = os.path.join(os.path.dirname(__file__), "fixtures", "all_type_nullable.table.sql")
+    ddl = open(path).read()
     plan = GendataPlan([ddl], {"tables": [{"name": "all_type_nullable", "row_count": 50}]})
     df = plan.generate(spark)["all_type_nullable"]
     assert len(df.columns) == 74

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import time
 
+import pytest
+
 from dodo_spark.plans.diff import diff_results
 from dodo_spark.plans.replay import decode_replay_sqls, replay_statements
 
@@ -133,6 +135,34 @@ def test_replay_speed_preserves_order_and_sleeps(spark):
     assert elapsed >= 0.15  # (2000ms - 100ms) / 10 = 190ms sleep
     assert {r.query_id for r in rows} == {"s1", "s2"}
     assert all(r.err is None for r in rows)
+
+
+def test_replay_speed_sleeps_match_replay_schedule(spark, monkeypatch):
+    """Runtime pacing equals the oracle-pinned schedule, including each
+    client's FIRST statement, which waits from the corpus min ts with
+    zero prior duration (reference replay.go:221)."""
+    import types
+
+    import dodo_spark.plans.replay as rp
+
+    sleeps = []
+    monkeypatch.setattr(rp, "time", types.SimpleNamespace(
+        sleep=sleeps.append, perf_counter=time.perf_counter))
+    decoded = spark.createDataFrame(
+        [
+            ("2025-01-01 00:00:00.000", "a", "u", "d", "q1", 100, "SELECT 1 AS x"),
+            ("2025-01-01 00:00:01.000", "b", "u", "d", "q2", 200, "SELECT 2 AS x"),
+            ("2025-01-01 00:00:01.100", "b", "u", "d", "q3", 500, "SELECT 3 AS x"),
+            ("2025-01-01 00:00:02.000", "a", "u", "d", "q4", 50, "SELECT 4 AS x"),
+        ],
+        "ts STRING, client STRING, user STRING, db STRING, query_id STRING, "
+        "duration_ms BIGINT, stmt STRING",
+    )
+    replay_statements(spark, decoded, speed=8.0).collect()
+    expected = [r.sleep_ms / 1000 for r in rp.replay_schedule(decoded, 8.0).collect()
+                if r.sleep_ms > 0]
+    assert len(expected) == 2  # q2 (first of b) and q4
+    assert sorted(sleeps) == pytest.approx(sorted(expected))
 
 
 def test_replay_survives_malformed_timing_metadata(spark):

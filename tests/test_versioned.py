@@ -2545,3 +2545,31 @@ def test_checkpoint_first_add_survives_restore_readd(spark, tmp_path):
     # the re-added file physically stores 'a'; the v1 rename still applies
     assert restored.columns == ["k", "b"]
     assert {(r["k"], r["b"]) for r in restored.collect()} == {(1, 1.0)}
+
+
+@pytest.fixture()
+def parquet_1000(spark, tmp_path):
+    path = str(tmp_path / "p1000")
+    spark.range(1000).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_scan_rows_bound_counts_each_union_leaf(parquet_1000):
+    """inputFiles() dedups, so a self-union reads the same footer rows
+    once per scan leaf; the bound must cover every leaf."""
+    from dodo_spark.sources.versioned import scan_rows_bound
+
+    assert scan_rows_bound(parquet_1000) == 1000  # one leaf: footer rows
+    df = parquet_1000.union(parquet_1000)
+    bound = scan_rows_bound(df)
+    assert bound is None or bound >= df.count()
+
+
+def test_scan_rows_bound_refuses_sampling_with_replacement(parquet_1000):
+    """Sample(withReplacement=true) can emit more rows than it reads."""
+    from dodo_spark.sources.versioned import scan_rows_bound
+
+    df = parquet_1000.sample(True, 3.0, 1)
+    bound = scan_rows_bound(df)
+    assert bound is None or bound >= df.count()
+    assert scan_rows_bound(parquet_1000.sample(False, 0.5, 1)) == 1000
