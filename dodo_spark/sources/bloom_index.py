@@ -336,6 +336,7 @@ def read_point_lookup(
         # 3-tuple key (the purge matches on (path, version) prefix), so
         # repeated lookups at one version pay the single footer read once
         from dodo_spark.sources.versioned import (
+            _footer_schema,
             _schema_cache_get,
             _schema_cache_put,
         )
@@ -343,7 +344,10 @@ def read_point_lookup(
         ck = (table_path, version, "bloom_probe_fast")
         schema = _schema_cache_get(ck)
         if schema is None:
-            schema = spark.read.parquet(_join(table_path, files[0])).schema
+            # the file's own footer schema when it stores one; else
+            # Spark's inference job over that one file
+            first = _join(table_path, files[0])
+            schema = _footer_schema(first) or spark.read.parquet(first).schema
             _schema_cache_put(ck, schema)
         if col not in schema.names:
             schema = merged_schema()

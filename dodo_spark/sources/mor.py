@@ -91,26 +91,20 @@ def delete_where_mor(
     # path pays. Same visibility/zombie argument as _write_data_files:
     # the sidecar only becomes live via the manifest put-if-absent.
     from dodo_spark.sources.versioned import (
+        _driver_write_qualifies,
         _files_rows_bound,
         _local_path,
-        _SMALL_COMMIT_ROWS,
+        _write_arrow_file,
     )
 
     live = live_files(table_path, max(versions))
     bound = _files_rows_bound(table_path, live)
-    lp = _local_path(snap)
     n: int | None = None
     files: list[str] = []
-    if bound is not None and bound <= _SMALL_COMMIT_ROWS and lp is not None:
+    if _driver_write_qualifies(snap, bound):
         tbl = keys_df.toArrow()
         if tbl.num_rows > 0:
-            import os
-
-            import pyarrow.parquet as pq
-
-            os.makedirs(lp, exist_ok=True)
-            name = f"part-00000-{uuid.uuid4().hex[:12]}.parquet"
-            pq.write_table(tbl, os.path.join(lp, name), compression="snappy")
+            name = _write_arrow_file(keys_df, tbl, _local_path(snap))
             files = [f"{attempt}/{name}"]
             n = tbl.num_rows
         # 0 matched keys: fall through to the distributed writer so the
@@ -123,7 +117,11 @@ def delete_where_mor(
             for name in fs.list_names(snap)
             if name.endswith(".parquet")
         )
-        n = spark.read.parquet(snap).count()
+        # the written files' footer row counts when local; a count job
+        # off-box
+        n = _files_rows_bound(table_path, files)
+        if n is None:
+            n = spark.read.parquet(snap).count()
     _commit(
         table_path,
         version,
@@ -250,19 +248,23 @@ def purge_deletes(
     reset. Old DV sidecars stay manifest-referenced (time travel to
     pre-purge versions still applies them) and inert for new reads."""
     latest = read_with_deletes(spark, table_path)
-    # write_version computes the remove side itself; localCheckpoint
-    # pins the view content before the commit starts mutating state.
-    # The checkpoint hides the scan from the automatic small-commit
-    # bound, so pass the provable one: masked view <= live footer rows.
-    from dodo_spark.sources.versioned import _files_rows_bound
+    # write_version computes the remove side itself; the masked view is
+    # pinned before the commit starts mutating state. The DV anti-join
+    # hides the scan from the automatic small-commit bound, so pass the
+    # provable one: masked view <= live footer rows. Within it the
+    # driver fast path's single Arrow collect is the pin; otherwise an
+    # eager localCheckpoint is.
+    from dodo_spark.sources.versioned import (
+        _driver_write_qualifies,
+        _files_rows_bound,
+    )
 
     bound = _files_rows_bound(
         table_path, live_files(table_path, max(list_versions(table_path)))
     )
-    return write_version(
-        latest.localCheckpoint(eager=True), table_path, version,
-        rows_bound=bound,
-    )
+    if not _driver_write_qualifies(table_path, bound):
+        latest = latest.localCheckpoint(eager=True)
+    return write_version(latest, table_path, version, rows_bound=bound)
 
 
 # ---------------------------------------------------------------------------

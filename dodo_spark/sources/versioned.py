@@ -862,7 +862,11 @@ def _logical_read(
     """Scan an explicit file list presenting the LOGICAL schema at
     ``version`` — the single choke point every multi-file read in this
     module (and mor.py / bloom_index.py / cdc_apply.py) goes through.
-    Without renames this is exactly the old mergeSchema scan (fast
+    Each scan group takes its schema from the data files' own footers
+    when every file carries the same Spark schema there
+    (``_shared_footer_schema`` — no inference job, the same schema);
+    otherwise (off-box, keyless files, additive evolution) it is the
+    ``mergeSchema`` scan. Without renames that is one scan (fast
     path: one checkpoint probe, zero extra manifest reads on
     checkpointed tables). With renames, files written under an older
     name are grouped by the rename chain that applies to them (renames
@@ -875,9 +879,11 @@ def _logical_read(
     them in so one operation pays the metadata scan once."""
 
     def scan(paths: list[str]) -> DataFrame:
-        return spark.read.option("mergeSchema", "true").parquet(
-            *[_join(table_path, f) for f in paths]
-        )
+        full = [_join(table_path, f) for f in paths]
+        schema = _shared_footer_schema(spark, full)
+        if schema is None:
+            return spark.read.option("mergeSchema", "true").parquet(*full)
+        return spark.read.schema(schema).parquet(*full)
 
     if events is None:
         events = _schema_events_upto(table_path, version)
@@ -931,8 +937,8 @@ def _logical_read(
 
 # merged LOGICAL schema cache: a committed (table_path, version) pair is
 # immutable — its live set, event chain and therefore merged schema can
-# never change — so the expensive part (mergeSchema inference = one
-# parquet footer read PER LIVE FILE, driver-side) is paid at most once
+# never change — so the expensive part (one parquet footer read PER LIVE
+# FILE, or a mergeSchema inference job) is paid at most once
 # per version instead of once per point lookup / empty-frame build
 # (round-9 advisor finding: negative lookups paid O(live files) footer
 # IO per call). Bounded LRU; invalidated on commit for the one case a
@@ -1026,7 +1032,7 @@ def _apply_event_to_schema(schema, extra: dict):
     commit just created.
 
     Every derived field is normalized to ``nullable=True`` with empty
-    metadata — exactly what the real read path (parquet ``mergeSchema``
+    metadata — exactly what the real read path (the parquet scan
     + ``unionByName`` + ``withColumn``/``alias``, which drops metadata
     and is force-nullable for some casts) always produces — so a
     non-nullable or metadata-bearing field entering the chain can never
@@ -1092,29 +1098,92 @@ _ROW_BOUND_SAFE_NODES = frozenset(
     }
 )
 
-_FOOTER_META_CACHE: dict[tuple[str, int, int], int] = {}
+# the footer key under which Spark's parquet writer stores the row
+# schema (StructType JSON) — the same key Spark's own schema inference
+# reads first; the driver-side writers below store it too
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+_FOOTER_META_CACHE: dict[tuple[str, int, int], tuple[int, object]] = {}
 
 
-def _footer_rows(local_path: str) -> int | None:
-    """num_rows from the parquet footer (driver-side metadata read, no
-    data scan). Cached on (path, size, mtime) — data files in this layer
-    are immutable once committed, but scratch fixtures can be rewritten."""
+def _footer_key(local_path: str) -> tuple[str, int, int] | None:
     try:
         st = os.stat(local_path)
     except OSError:
         return None
-    key = (local_path, st.st_size, int(st.st_mtime_ns))
+    return (local_path, st.st_size, int(st.st_mtime_ns))
+
+
+def _footer_meta(local_path: str) -> tuple[int, object] | None:
+    """``(num_rows, spark_schema)`` from the parquet footer (driver-side
+    metadata read, no data scan); ``spark_schema`` is the StructType the
+    file stores under ``_SPARK_ROW_METADATA``, or None when it stores
+    none. One read serves both the row bound and the footer schema.
+    Cached on (path, size, mtime) — data files in this layer are
+    immutable once committed, but scratch fixtures can be rewritten."""
+    key = _footer_key(local_path)
+    if key is None:
+        return None
     hit = _FOOTER_META_CACHE.get(key)
     if hit is not None:
         return hit
     try:
         import pyarrow.parquet as pq
 
-        n = pq.ParquetFile(local_path).metadata.num_rows
-    except Exception:  # noqa: BLE001 — bound is best-effort
+        md = pq.ParquetFile(local_path).metadata
+    except Exception:  # noqa: BLE001 — footer metadata is best-effort
         return None
-    _FOOTER_META_CACHE[key] = n
-    return n
+    schema = None
+    raw = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if raw is not None:
+        from pyspark.sql.types import StructType
+
+        try:
+            schema = StructType.fromJson(json.loads(raw))
+        except Exception:  # noqa: BLE001 — unparseable: infer instead
+            schema = None
+    _FOOTER_META_CACHE[key] = (md.num_rows, schema)
+    return _FOOTER_META_CACHE[key]
+
+
+def _footer_rows(local_path: str) -> int | None:
+    """num_rows from the parquet footer (see ``_footer_meta``)."""
+    meta = _footer_meta(local_path)
+    return None if meta is None else meta[0]
+
+
+def _footer_schema(path: str):
+    """The Spark StructType a data file stores in its footer, or None
+    (off-box path, unreadable footer, or a file without the key)."""
+    lp = _local_path(path)
+    meta = _footer_meta(lp) if lp is not None else None
+    return None if meta is None else meta[1]
+
+
+def _shared_footer_schema(spark: SparkSession, paths: list[str]):
+    """The footer schema every file in ``paths`` carries, when they all
+    carry the same one (parsed StructTypes compared, not JSON text) —
+    passing it to ``spark.read.schema`` gives exactly the schema
+    ``mergeSchema`` would infer, without the inference job. None keeps
+    the mergeSchema scan: an off-box path, a file without the key,
+    differing schemas (additive evolution), or more uncached footers than
+    Spark's own ``parallelPartitionDiscovery.threshold`` (past it a
+    distributed footer read beats a serial driver one)."""
+    local = [_local_path(p) for p in paths]
+    if not local or None in local:
+        return None
+    threshold = int(
+        spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
+        )
+    )
+    uncached = sum(_footer_key(lp) not in _FOOTER_META_CACHE for lp in local)
+    if uncached > threshold:
+        return None
+    schemas = [_footer_schema(p) for p in paths]
+    if None in schemas or any(s != schemas[0] for s in schemas[1:]):
+        return None
+    return schemas[0]
 
 
 def scan_rows_bound(df: DataFrame) -> int | None:
@@ -1189,6 +1258,54 @@ def _files_rows_bound(table_path: str, files: list[str]) -> int | None:
     return total
 
 
+def _driver_write_qualifies(path: str, bound: int | None) -> bool:
+    """Whether a frame with row bound ``bound`` written under ``path``
+    takes the driver-side fast path: a proven bound within the
+    small-commit budget and a local destination."""
+    return (
+        bound is not None
+        and bound <= _SMALL_COMMIT_ROWS
+        and _local_path(path) is not None
+    )
+
+
+# spark.sql.parquet.compression.codec values with an exact pyarrow twin;
+# any other codec (lz4, lzo, brotli, ...) keeps Spark's default, snappy
+_ARROW_CODECS = {
+    "none": "none",
+    "uncompressed": "none",
+    "snappy": "snappy",
+    "gzip": "gzip",
+    "zstd": "zstd",
+}
+
+
+def _write_arrow_file(df: DataFrame, tbl, local_dir: str) -> str:
+    """Write ``tbl`` (``df`` collected to Arrow) as ONE parquet file in
+    ``local_dir`` the way Spark's writer would — the session's
+    compression codec, and ``df``'s schema under ``_SPARK_ROW_METADATA``
+    so readers take the footer schema instead of inferring one. Returns
+    the file name. The one writer behind both driver-side fast paths
+    (small commits here, small deletion vectors in mor.py)."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    codec = df.sparkSession.conf.get(
+        "spark.sql.parquet.compression.codec", "snappy"
+    )
+    meta = dict(tbl.schema.metadata or {})
+    meta[_SPARK_ROW_METADATA] = df._jdf.schema().json().encode()
+    os.makedirs(local_dir, exist_ok=True)
+    name = f"part-00000-{uuid.uuid4().hex[:12]}.parquet"
+    pq.write_table(
+        tbl.replace_schema_metadata(meta),
+        os.path.join(local_dir, name),
+        compression=_ARROW_CODECS.get((codec or "").lower(), "snappy"),
+    )
+    return name
+
+
 def _write_data_files(
     df: DataFrame,
     table_path: str,
@@ -1238,25 +1355,14 @@ def _write_data_files_ex(
     attempt = f"v={version}/w-{uuid.uuid4().hex[:12]}"
     snap = _join(table_path, attempt)
     bound = scan_rows_bound(df) if rows_bound == "auto" else rows_bound
-    if bound is not None and bound <= _SMALL_COMMIT_ROWS:
-        lp = _local_path(snap)
-        if lp is not None:
-            tbl = df.toArrow()  # one collect job, bounded by ``bound``
-            if tbl.num_rows > 0:
-                # 0-row frames fall through to the distributed writer so
-                # the add-list shape (one empty part file vs none) stays
-                # byte-identical with the historical behavior
-                import pyarrow.parquet as pq
-
-                os.makedirs(lp, exist_ok=True)
-                name = f"part-00000-{uuid.uuid4().hex[:12]}.parquet"
-                codec = "zstd" if "zstd" in (
-                    df.sparkSession.conf.get(
-                        "spark.sql.parquet.compression.codec", "snappy"
-                    ) or ""
-                ) else "snappy"
-                pq.write_table(tbl, os.path.join(lp, name), compression=codec)
-                return [f"{attempt}/{name}"], tbl.num_rows
+    if _driver_write_qualifies(snap, bound):
+        tbl = df.toArrow()  # one collect job, bounded by ``bound``
+        if tbl.num_rows > 0:
+            # 0-row frames fall through to the distributed writer so
+            # the add-list shape (one empty part file vs none) stays
+            # byte-identical with the historical behavior
+            name = _write_arrow_file(df, tbl, _local_path(snap))
+            return [f"{attempt}/{name}"], tbl.num_rows
     df.write.mode("overwrite").parquet(snap)
     fs = _fs_for(table_path)
     return sorted(
@@ -1556,9 +1662,10 @@ def delete_where(
     "rows_deleted"}. At warehouse scale the touched-file probe is one scan
     with per-file match counts (Delta narrows it further with file-level
     min/max stats before the scan — the same commit algebra applies).
-    All multi-file reads use mergeSchema so additive schema evolution
-    survives a rewrite (a narrower sampled schema would silently drop
-    newer columns)."""
+    Multi-file reads go through ``_logical_read``: the files' shared
+    footer schema, or ``mergeSchema`` when they disagree, so additive
+    schema evolution survives a rewrite (a narrower sampled schema would
+    silently drop newer columns)."""
     from pyspark.sql import functions as F
 
     versions = _check_commit_order(table_path, version)
@@ -1602,6 +1709,38 @@ def delete_where(
     }
 
 
+def _arrow_key_bounds(tbl, schema, key: str) -> dict | None:
+    """Spark's ``min``/``max``/``count``/``countDistinct`` of ``key``
+    over a collected update set, computed by ``pyarrow.compute`` under
+    the same null rules (min/max/countDistinct skip nulls, the row count
+    does not). None — the caller aggregates in Spark — unless ``key`` is
+    exactly one field of a type whose ordering and distinctness agree in
+    both engines: floating keys do not (Spark orders NaN last and folds
+    -0.0 into 0.0, pyarrow skips NaN and keeps -0.0), nor do collated
+    strings or nested types."""
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    fields = [f for f in schema.fields if f.name == key]
+    if len(fields) != 1:
+        return None
+    dt = fields[0].dataType
+    exact = (
+        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+        T.BooleanType, T.DateType, T.DecimalType,
+    )
+    if not (isinstance(dt, exact) or dt == T.StringType()):
+        return None
+    col = tbl.column(key)
+    lo_hi = pc.min_max(col)
+    return {
+        "lo": lo_hi["min"].as_py(),
+        "hi": lo_hi["max"].as_py(),
+        "n_updates": tbl.num_rows,
+        "n_update_keys": pc.count_distinct(col, mode="only_valid").as_py(),
+    }
+
+
 def merge_upsert(
     spark: SparkSession,
     table_path: str,
@@ -1634,22 +1773,34 @@ def merge_upsert(
     )
     prev_live = live_files(table_path, versions[-1])
     paths = {f: _join(table_path, f) for f in prev_live}
-    updates = updates.localCheckpoint(eager=True)  # one computation, 3 uses
+    # the update set is computed ONCE (3 uses below): a small one is
+    # collected to Arrow in one job and rebuilt as a local relation, its
+    # key bounds and counts taken on the driver; a large one is pinned
+    # by an eager localCheckpoint and aggregated by Spark
+    small = updates.limit(_SMALL_COMMIT_ROWS + 1).toArrow()
+    if small.num_rows <= _SMALL_COMMIT_ROWS:
+        bounds = _arrow_key_bounds(small, updates.schema, key)
+        updates = spark.createDataFrame(small, schema=updates.schema)
+    else:
+        updates = updates.localCheckpoint(eager=True)
+        bounds = None
     keys_df = F.broadcast(updates.select(key).distinct())
 
     # file skipping via footer min/max stats: a live file whose [min,max]
     # range on the merge key cannot overlap the update keys' range cannot
     # contain a match — the probe scan reads only overlapping files (the
     # Delta data-skipping primitive; files without stats stay candidates).
-    # r14: row count and distinct-key count ride the same one-job agg —
-    # the count feeds rows_inserted and the pair checks the MERGE
-    # uniqueness contract, which gates the fused single-probe below.
-    bounds = updates.agg(
-        F.min(key).alias("lo"),
-        F.max(key).alias("hi"),
-        F.count(F.lit(1)).alias("n_updates"),
-        F.countDistinct(key).alias("n_update_keys"),
-    ).first()
+    # Row count and distinct-key count ride with the bounds (driver-side
+    # for a collected set, else one agg job) — the count feeds
+    # rows_inserted and the pair checks the MERGE uniqueness contract,
+    # which gates the fused single-probe below.
+    if bounds is None:
+        bounds = updates.agg(
+            F.min(key).alias("lo"),
+            F.max(key).alias("hi"),
+            F.count(F.lit(1)).alias("n_updates"),
+            F.countDistinct(key).alias("n_update_keys"),
+        ).first()
     n_updates = int(bounds["n_updates"])
     updates_unique = int(bounds["n_update_keys"]) == n_updates
     stats = file_stats(table_path, versions[-1])
@@ -1770,9 +1921,10 @@ def compact_files(
     """Commit ``version`` as a bin-packed REWRITE of the live set into
     ``target_files`` files — logically identical content (the Delta
     OPTIMIZE primitive; small-file compaction after many incremental
-    commits). Older versions still read their own file lists. Reads with
-    mergeSchema so a compaction after additive schema evolution keeps
-    every column (older files surface NULLs, same as read_version).
+    commits). Older versions still read their own file lists. Reads
+    through ``_logical_read`` (shared footer schema, else mergeSchema),
+    so a compaction after additive schema evolution keeps every column
+    (older files surface NULLs, same as read_version).
 
     ``cluster_by``: range-cluster the rewrite on these columns (the
     OPTIMIZE ZORDER role for the single/lexicographic-column case):
@@ -2114,9 +2266,11 @@ def read_version(
     if not files:
         raise ValueError(f"version {version} at {table_path} has no live files")
     _check_not_vacuumed(table_path, version, files, versions, fs, names)
-    # mergeSchema: ADDITIVE schema evolution — an append_version that
-    # introduced new columns unions by name with older files (absent
-    # columns read as NULL), the Delta/Iceberg add-column semantics.
+    # schema: the footer schema the files share (no inference job), or
+    # mergeSchema when they differ — ADDITIVE schema evolution: an
+    # append_version that introduced new columns unions by name with
+    # older files (absent columns read as NULL), the Delta/Iceberg
+    # add-column semantics.
     # RENAME / DROP / RETYPE are metadata-only commits resolved per-file
     # by the schema-event chain (_logical_read / rename_column /
     # drop_column / retype_column).
