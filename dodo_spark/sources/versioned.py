@@ -880,7 +880,7 @@ def _logical_read(
 
     def scan(paths: list[str]) -> DataFrame:
         full = [_join(table_path, f) for f in paths]
-        schema = _shared_footer_schema(spark, full)
+        schema = _shared_footer_schema(full)
         if schema is None:
             return spark.read.option("mergeSchema", "true").parquet(*full)
         return spark.read.schema(schema).parquet(*full)
@@ -1106,14 +1106,6 @@ _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 _FOOTER_META_CACHE: dict[tuple[str, int, int], tuple[int, object]] = {}
 
 
-def _footer_key(local_path: str) -> tuple[str, int, int] | None:
-    try:
-        st = os.stat(local_path)
-    except OSError:
-        return None
-    return (local_path, st.st_size, int(st.st_mtime_ns))
-
-
 def _footer_meta(local_path: str) -> tuple[int, object] | None:
     """``(num_rows, spark_schema)`` from the parquet footer (driver-side
     metadata read, no data scan); ``spark_schema`` is the StructType the
@@ -1121,9 +1113,11 @@ def _footer_meta(local_path: str) -> tuple[int, object] | None:
     none. One read serves both the row bound and the footer schema.
     Cached on (path, size, mtime) — data files in this layer are
     immutable once committed, but scratch fixtures can be rewritten."""
-    key = _footer_key(local_path)
-    if key is None:
+    try:
+        st = os.stat(local_path)
+    except OSError:
         return None
+    key = (local_path, st.st_size, int(st.st_mtime_ns))
     hit = _FOOTER_META_CACHE.get(key)
     if hit is not None:
         return hit
@@ -1160,47 +1154,30 @@ def _footer_schema(path: str):
     return None if meta is None else meta[1]
 
 
-def _shared_footer_schema(spark: SparkSession, paths: list[str]):
+def _shared_footer_schema(paths: list[str]):
     """The footer schema every file in ``paths`` carries, when they all
     carry the same one (parsed StructTypes compared, not JSON text) —
     passing it to ``spark.read.schema`` gives exactly the schema
-    ``mergeSchema`` would infer, without the inference job. None keeps
-    the mergeSchema scan: an off-box path, a file without the key,
-    differing schemas (additive evolution), or more uncached footers than
-    Spark's own ``parallelPartitionDiscovery.threshold`` (past it a
-    distributed footer read beats a serial driver one)."""
-    local = [_local_path(p) for p in paths]
-    if not local or None in local:
+    ``mergeSchema`` would infer, without the inference job. Footers are
+    read on the driver through ``_FOOTER_META_CACHE``. None keeps the
+    mergeSchema scan: an off-box path, a file without the key, or
+    differing schemas (additive evolution)."""
+    first = _footer_schema(paths[0]) if paths else None
+    if first is None or any(_footer_schema(p) != first for p in paths[1:]):
         return None
-    threshold = int(
-        spark.conf.get(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
-        )
-    )
-    uncached = sum(_footer_key(lp) not in _FOOTER_META_CACHE for lp in local)
-    if uncached > threshold:
-        return None
-    schemas = [_footer_schema(p) for p in paths]
-    if None in schemas or any(s != schemas[0] for s in schemas[1:]):
-        return None
-    return schemas[0]
+    return first
 
 
-def scan_rows_bound(df: DataFrame) -> int | None:
-    """Provable upper bound on ``df``'s row count, or None.
+def _scan_inputs(df: DataFrame) -> tuple[int, int] | None:
+    """``(rows, bytes)`` upper bounds on what ``df`` reads, or None.
 
     Sound only when every operator in the optimized logical plan is
     row-preserving/reducing (whitelist above) over plain local file
     scans: then rows(df) <= leaves x sum of the input files' footer
     num_rows, where leaves is the number of scan nodes — inputFiles()
-    dedups, so a self-union reads the same files once per leaf.
-    Multiplying or opaque nodes (joins, explode, checkpoints, sampling
-    with replacement) return None. Also returns None when the inputs
-    exceed the small-commit byte budget — a bound that large is useless
-    to the fast path and the footer sweep would be wasted work. Callers
-    holding a frame whose scan is hidden behind a localCheckpoint can
-    call this BEFORE the checkpoint and pass the bound through
-    explicitly."""
+    dedups, so a self-union reads the same files once per leaf; bytes is
+    leaves x the files' sizes. Multiplying or opaque nodes (joins,
+    explode, checkpoints, sampling with replacement) return None."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     except Exception:  # noqa: BLE001 — probe is best-effort
@@ -1237,9 +1214,19 @@ def scan_rows_bound(df: DataFrame) -> int | None:
             total_bytes += os.path.getsize(lp)
         except OSError:
             return None
-    if leaves * total_bytes > _SMALL_COMMIT_INPUT_BYTES:
+    return leaves * total_rows, leaves * total_bytes
+
+
+def scan_rows_bound(df: DataFrame) -> int | None:
+    """Provable upper bound on ``df``'s row count (``_scan_inputs``), or
+    None. Also None when the inputs exceed the small-commit byte budget
+    — a bound that large is useless to the fast path. Callers holding a
+    frame whose scan is hidden behind a localCheckpoint can call this
+    BEFORE the checkpoint and pass the bound through explicitly."""
+    inputs = _scan_inputs(df)
+    if inputs is None or inputs[1] > _SMALL_COMMIT_INPUT_BYTES:
         return None
-    return leaves * total_rows
+    return inputs[0]
 
 
 def _files_rows_bound(table_path: str, files: list[str]) -> int | None:
@@ -1773,17 +1760,30 @@ def merge_upsert(
     )
     prev_live = live_files(table_path, versions[-1])
     paths = {f: _join(table_path, f) for f in prev_live}
-    # the update set is computed ONCE (3 uses below): a small one is
-    # collected to Arrow in one job and rebuilt as a local relation, its
-    # key bounds and counts taken on the driver; a large one is pinned
-    # by an eager localCheckpoint and aggregated by Spark
-    small = updates.limit(_SMALL_COMMIT_ROWS + 1).toArrow()
-    if small.num_rows <= _SMALL_COMMIT_ROWS:
+    # the update set is computed ONCE (3 uses below). Unless its scan
+    # inputs already prove it over the small-commit budget, it is
+    # collected to Arrow in one bounded job and, when within the budget
+    # in rows and bytes, rebuilt as a local relation with its key bounds
+    # and counts taken on the driver; otherwise an eager localCheckpoint
+    # pins it and Spark aggregates it
+    inputs = _scan_inputs(updates)
+    small = None
+    if inputs is None or (
+        inputs[0] <= _SMALL_COMMIT_ROWS
+        and inputs[1] <= _SMALL_COMMIT_INPUT_BYTES
+    ):
+        small = updates.limit(_SMALL_COMMIT_ROWS + 1).toArrow()
+        if (
+            small.num_rows > _SMALL_COMMIT_ROWS
+            or small.nbytes > _SMALL_COMMIT_INPUT_BYTES
+        ):
+            small = None
+    bounds = None
+    if small is not None:
         bounds = _arrow_key_bounds(small, updates.schema, key)
         updates = spark.createDataFrame(small, schema=updates.schema)
     else:
         updates = updates.localCheckpoint(eager=True)
-        bounds = None
     keys_df = F.broadcast(updates.select(key).distinct())
 
     # file skipping via footer min/max stats: a live file whose [min,max]
@@ -1791,9 +1791,9 @@ def merge_upsert(
     # contain a match — the probe scan reads only overlapping files (the
     # Delta data-skipping primitive; files without stats stay candidates).
     # Row count and distinct-key count ride with the bounds (driver-side
-    # for a collected set, else one agg job) — the count feeds
-    # rows_inserted and the pair checks the MERGE uniqueness contract,
-    # which gates the fused single-probe below.
+    # for a collected set, else one agg — 3 jobs under AQE) — the count
+    # feeds rows_inserted and the pair checks the MERGE uniqueness
+    # contract, which gates the fused single-probe below.
     if bounds is None:
         bounds = updates.agg(
             F.min(key).alias("lo"),
@@ -2317,12 +2317,13 @@ def read_version_pruned(
     ``values``, opening ONLY the stat-qualified files (manifest-level
     data skipping standing in for directory partition pruning; the
     residual filter still applies row-group/row-level pruning inside the
-    candidates)."""
+    candidates). The schema is ``read_version``'s whichever files
+    survive: after additive evolution, kept files that predate a column
+    read it as NULL."""
     from pyspark.sql import functions as F
 
-    _check_not_vacuumed(
-        table_path, version, live_files(table_path, version), list_versions(table_path)
-    )
+    live = live_files(table_path, version)
+    _check_not_vacuumed(table_path, version, live, list_versions(table_path))
     candidates, _ = prune_files_by_stats(table_path, version, column, values)
     if not candidates:
         # provably empty: keep the schema without scanning data rows
@@ -2330,9 +2331,29 @@ def read_version_pruned(
             read_version(spark, table_path, version)
             .filter(F.lit(False))
         )
-    return _logical_read(spark, table_path, candidates, version).filter(
-        F.col(column).isin(list(values))
-    )
+    events = _schema_events_upto(table_path, version)
+    df = _logical_read(spark, table_path, candidates, version, events)
+    # a strict subset of live files that all share one footer schema and
+    # no schema event reads exactly read_version's schema; otherwise the
+    # kept files may predate a column
+    if len(candidates) < len(live) and (
+        events
+        or _shared_footer_schema([_join(table_path, f) for f in live]) is None
+    ):
+        full = logical_schema(spark, table_path, live, version, events)
+        if df.schema != full:
+            have = set(df.columns)
+            df = df.select(
+                [
+                    F.col(f.name)
+                    if f.name in have
+                    else F.lit(None)
+                    .cast(f.dataType)
+                    .alias(f.name, metadata=f.metadata)
+                    for f in full.fields
+                ]
+            )
+    return df.filter(F.col(column).isin(list(values)))
 
 
 def read_changes(

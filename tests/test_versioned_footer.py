@@ -77,15 +77,34 @@ def _assert_matches_merge_schema(spark, monkeypatch, path, versions, key, probe)
     schema turned off, i.e. the plain ``mergeSchema`` scan."""
     got = {v: _reads(spark, path, v, key, probe) for v in versions}
     with monkeypatch.context() as m:
-        m.setattr(V, "_shared_footer_schema", lambda spark, paths: None)
+        m.setattr(V, "_shared_footer_schema", lambda paths: None)
         for v in versions:
             for g, w in zip(got[v], _reads(spark, path, v, key, probe)):
                 _same(g, w)
 
 
+def _assert_writers_agree(spark, monkeypatch, tmp_path, build, versions,
+                          key, probe) -> None:
+    """``build(path, driver)`` commits one history through the driver
+    fast path and through the distributed writer. Each table reads as
+    its own mergeSchema scan does, and the two tables read alike at
+    every version: same schema (metadata included) and rows."""
+    paths = {}
+    for driver in (True, False):
+        paths[driver] = str(tmp_path / ("driver" if driver else "distributed"))
+        build(paths[driver], driver)
+        _assert_matches_merge_schema(
+            spark, monkeypatch, paths[driver], versions, key, probe
+        )
+    for v in versions:
+        for d, w in zip(_reads(spark, paths[True], v, key, probe),
+                        _reads(spark, paths[False], v, key, probe)):
+            _same(d, w)
+
+
 def _footer_path_taken(spark, path: str, version: int) -> bool:
     files = [V._join(path, f) for f in live_files(path, version)]
-    return V._shared_footer_schema(spark, files) is not None
+    return V._shared_footer_schema(files) is not None
 
 
 @pytest.fixture(scope="module")
@@ -99,64 +118,73 @@ def all_types(spark):
     return plan.generate(spark)["all_type_nullable"].localCheckpoint()
 
 
-@pytest.mark.parametrize("rows_bound", [40, None], ids=["driver", "distributed"])
 def test_all_types_footer_schema_matches_merge_schema(
-    spark, tmp_path, monkeypatch, all_types, rows_bound
+    spark, tmp_path, monkeypatch, all_types
 ):
     """The 74-column fixture, committed through the driver fast path and
     through the distributed writer: a write, an append, a merge and a
     merge-on-read delete all read back exactly as mergeSchema reads
-    them, and every read takes the footer schema. The merge re-writes
-    five rows unchanged, so its Arrow round trip of the update set must
-    keep every value of every type."""
-    path = str(tmp_path / "t")
-    write_version(all_types.filter("id < 20"), path, 0, rows_bound=rows_bound)
-    append_version(all_types.filter("id >= 20"), path, 1, rows_bound=rows_bound)
-    merge_upsert(spark, path, 2, all_types.filter("id < 5"), "id")
-    assert _rows(read_version(spark, path, 2)) == _rows(
-        read_version(spark, path, 1)
-    )
-    mor.delete_where_mor(spark, path, 3, "id % 3 = 0", "id")
-    assert all(_footer_path_taken(spark, path, v) for v in range(4))
-    _assert_matches_merge_schema(
-        spark, monkeypatch, path, list(range(4)), "id", [1, 3, 25]
+    them and alike for both writers, and every read takes the footer
+    schema. The merge re-writes five rows unchanged, so its Arrow round
+    trip of the update set must keep every value of every type."""
+
+    def build(path: str, driver: bool) -> None:
+        rows_bound = 40 if driver else None
+        write_version(all_types.filter("id < 20"), path, 0, rows_bound=rows_bound)
+        append_version(
+            all_types.filter("id >= 20"), path, 1, rows_bound=rows_bound
+        )
+        merge_upsert(spark, path, 2, all_types.filter("id < 5"), "id")
+        assert _rows(read_version(spark, path, 2)) == _rows(
+            read_version(spark, path, 1)
+        )
+        mor.delete_where_mor(spark, path, 3, "id % 3 = 0", "id")
+        assert all(_footer_path_taken(spark, path, v) for v in range(4))
+
+    _assert_writers_agree(
+        spark, monkeypatch, tmp_path, build, list(range(4)), "id", [1, 3, 25]
     )
 
 
-@pytest.mark.parametrize("rows_bound", [100, None], ids=["driver", "distributed"])
-def test_schema_event_chains_match_merge_schema(
-    spark, tmp_path, monkeypatch, rows_bound
-):
-    """The additive-append, rename, drop and retype chains: additive
-    evolution falls back to mergeSchema (the files disagree), every
-    other group takes its footer schema, and all reads agree."""
-    path = str(tmp_path / "t")
-    write_version(
-        spark.createDataFrame(
-            [(1, 10, "x"), (2, 20, "y")], "k BIGINT, a INT, b STRING"
-        ),
-        path, 0, rows_bound=rows_bound,
-    )
-    append_version(
-        spark.createDataFrame(
-            [(3, 30, "z", 3.5)], "k BIGINT, a INT, b STRING, c DOUBLE"
-        ),
-        path, 1, rows_bound=rows_bound,
-    )
-    rename_column(spark, path, 2, "a", "alpha")
-    drop_column(spark, path, 3, "b")
-    retype_column(spark, path, 4, "alpha", "bigint")
-    append_version(
-        spark.createDataFrame(
-            [(4, 40, 4.5)], "k BIGINT, alpha BIGINT, c DOUBLE"
-        ),
-        path, 5, rows_bound=rows_bound,
-    )
-    mor.delete_where_mor(spark, path, 6, "k = 2", "k")
-    assert _footer_path_taken(spark, path, 0)
-    assert not _footer_path_taken(spark, path, 1)  # additive evolution
-    _assert_matches_merge_schema(
-        spark, monkeypatch, path, list(range(7)), "k", [2, 4]
+def test_schema_event_chains_match_merge_schema(spark, tmp_path, monkeypatch):
+    """The additive-append, rename, drop and retype chains, through both
+    writers: additive evolution falls back to mergeSchema (the files
+    disagree), every other group takes its footer schema, and all reads
+    agree with mergeSchema and across the writers."""
+
+    def build(path: str, driver: bool) -> None:
+        rows_bound = 100 if driver else None
+        write_version(
+            spark.createDataFrame(
+                [(1, 10, "x"), (2, 20, "y")], "k BIGINT, a INT, b STRING"
+            ),
+            path, 0, rows_bound=rows_bound,
+        )
+        append_version(
+            spark.createDataFrame(
+                [(3, 30, "z", 3.5)], "k BIGINT, a INT, b STRING, c DOUBLE"
+            ),
+            path, 1, rows_bound=rows_bound,
+        )
+        rename_column(spark, path, 2, "a", "alpha")
+        drop_column(spark, path, 3, "b")
+        retype_column(spark, path, 4, "alpha", "bigint")
+        append_version(
+            spark.createDataFrame(
+                [(4, 40, 4.5)], "k BIGINT, alpha BIGINT, c DOUBLE"
+            ),
+            path, 5, rows_bound=rows_bound,
+        )
+        mor.delete_where_mor(spark, path, 6, "k = 2", "k")
+        assert _footer_path_taken(spark, path, 0)
+        assert not _footer_path_taken(spark, path, 1)  # additive evolution
+        # pruning keeps only the v0 file, which predates column c
+        assert read_version_pruned(spark, path, 1, "k", [2]).schema == (
+            read_version(spark, path, 1).schema
+        )
+
+    _assert_writers_agree(
+        spark, monkeypatch, tmp_path, build, list(range(7)), "k", [2, 4]
     )
 
 
@@ -185,29 +213,6 @@ def test_keyless_pyarrow_file_falls_back_to_merge_schema(
     assert jobs >= 1  # the mergeSchema inference job
     assert sorted(r["k"] for r in df.collect()) == [1, 2, 3]
     _assert_matches_merge_schema(spark, monkeypatch, path, [0, 1], "k", [3])
-
-
-def test_uncached_footers_over_threshold_keep_merge_schema(spark, tmp_path):
-    """More uncached footers than Spark's parallel-discovery threshold
-    leave the footer reads to Spark's distributed inference; once the
-    footers are cached the group takes its footer schema again."""
-    path = str(tmp_path / "t")
-    for v in range(2):
-        append_version(
-            spark.createDataFrame([(v, "x")], "k BIGINT, s STRING"),
-            path, v, rows_bound=1,
-        )
-    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    prev = spark.conf.get(key)
-    V._FOOTER_META_CACHE.clear()
-    spark.conf.set(key, "1")
-    try:
-        assert not _footer_path_taken(spark, path, 1)
-        for f in live_files(path, 1):
-            V._footer_meta(os.path.join(path, f))
-        assert _footer_path_taken(spark, path, 1)
-    finally:
-        spark.conf.set(key, prev)
 
 
 @pytest.mark.parametrize(
@@ -306,11 +311,11 @@ def test_merge_upsert_duplicate_and_null_update_keys(
     """Updates with a duplicated key and a null key break the MERGE
     uniqueness contract, so merge_upsert takes its two-job fallback
     instead of the fused rollup: matched update ROWS are counted
-    directly, and the null-keyed row is an insert that matches nothing.
-    The driver-side key statistics of a collected update set agree with
-    Spark's (countDistinct ignores nulls), and an update set over the
-    budget, checkpointed and aggregated by Spark, gives the same
-    result."""
+    directly, and the null-keyed row is an insert that matches nothing
+    (countDistinct ignores it, so 4 rows carry 2 distinct keys). The
+    driver-side key statistics of a collected update set agree with
+    Spark's, and an update set over the budget, checkpointed and
+    aggregated by Spark, gives the same result."""
     path = str(tmp_path / "t")
     write_version(
         spark.createDataFrame(
@@ -371,6 +376,61 @@ def test_arrow_key_bounds_only_for_exact_types(spark):
             F.countDistinct(key).alias("n_update_keys"),
         ).first().asDict()
         assert V._arrow_key_bounds(tbl, df.schema, key) == want
+
+
+def _record_calls(monkeypatch, cls, name: str) -> list:
+    """Patch ``cls.name`` to record each call's arguments."""
+    calls = []
+    orig = getattr(cls, name)
+
+    def wrapper(self, *args, **kwargs):
+        calls.append(args)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, name, wrapper)
+    return calls
+
+
+@pytest.mark.parametrize(
+    "files,rows,input_bytes,collected,checkpointed",
+    [
+        (True, None, None, True, False),  # within budget: one collect
+        (False, None, None, True, False),  # no provable bound: one collect
+        (True, 10, None, False, True),  # footers prove it over in rows
+        (True, None, 1, False, True),  # footers prove it over in bytes
+        (False, None, 1, True, True),  # collected, then over in bytes
+    ],
+    ids=["files-within", "memory-within", "files-rows-over",
+         "files-bytes-over", "memory-bytes-over"],
+)
+def test_merge_upsert_collects_update_set_only_within_budget(
+    spark, tmp_path, monkeypatch, files, rows, input_bytes, collected,
+    checkpointed,
+):
+    """An update set whose scan inputs prove it over the small-commit
+    budget (rows or bytes) is checkpointed without the bounded Arrow
+    collect; one without a provable bound is collected, and checkpointed
+    after all when the collected table is over the byte budget. Every
+    path commits the same table."""
+    path = str(tmp_path / "t")
+    _small_table(spark, path)
+    updates = spark.createDataFrame(
+        [(i, 0, "u") for i in range(190, 210)], "id BIGINT, grp INT, tag STRING"
+    )
+    if files:
+        updates.write.parquet(str(tmp_path / "updates"))
+        updates = spark.read.parquet(str(tmp_path / "updates"))
+    if rows is not None:
+        monkeypatch.setattr(V, "_SMALL_COMMIT_ROWS", rows)
+    if input_bytes is not None:
+        monkeypatch.setattr(V, "_SMALL_COMMIT_INPUT_BYTES", input_bytes)
+    limits = _record_calls(monkeypatch, type(updates), "limit")
+    checkpoints = _record_calls(monkeypatch, type(updates), "localCheckpoint")
+    out = merge_upsert(spark, path, 1, updates, "id")
+    assert ((V._SMALL_COMMIT_ROWS + 1,) in limits) == collected
+    assert bool(checkpoints) == checkpointed
+    assert out["rows_updated"] == 10 and out["rows_inserted"] == 10
+    assert read_version(spark, path, 1).count() == 210
 
 
 # ---------------------------------------------------------------------------
