@@ -4,8 +4,8 @@ of wiring a specific key (round-4 review ask; reference analogue: the
 single search surface the `search` CLI verb exposes).
 
 Tier selection (measured at sf0.01, local[8], 64-dim embeddings; recall@10
-against the exact brute-force ranking — regenerate with
-``python tools/ann_tiers.py``; the current table lives in SCALE.md §ANN):
+against the exact brute-force ranking — ``tests/test_ann.py`` asserts the
+recall floors; the measured table lives in SCALE.md §ANN):
 
 ========== ============================ ===================== ==============
 method     plan shape                   cost at 100 TB        typical recall
@@ -41,10 +41,10 @@ from dodo_spark.operators.similarity import (
     TOP_K,
     _ivf_index,
     _l2_long,
-    _plane_components,
     _pq_encode,
     cosine,
     cosine_pre,
+    lsh_bucket,
     norm2_long,
     scaled_vec,
     train_centroids_kmeans,
@@ -104,20 +104,7 @@ def _brute(spark, sf_dir, k, n_queries):
 
 def _lsh(spark, sf_dir, k, n_queries):
     v, _ = _corpus_and_queries(spark, sf_dir, n_queries)
-
-    def bucket_bit(j: int):
-        plane = F.array(*[F.lit(c) for c in _plane_components(j)]).cast("array<bigint>")
-        dot = F.aggregate(
-            F.zip_with(F.col("sv"), plane, lambda x, p: x * p),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        return (dot > 0).cast("bigint") * (1 << j)
-
-    bucket = sum(
-        [bucket_bit(j) for j in range(N_PLANES)], start=F.lit(0).cast("bigint")
-    )
-    bucketed = v.withColumn("bucket", bucket)
+    bucketed = v.withColumn("bucket", lsh_bucket(N_PLANES))
     q = bucketed.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("sv").alias("qv"),

@@ -1370,28 +1370,13 @@ def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, sv, cell): adaptive sign-bit quantizer cells — the shared
     assignment the key and its tests both use."""
     from dodo_spark.functions.vectors import scaled_vec
-    from dodo_spark.operators.similarity import _emb, _plane_components
+    from dodo_spark.operators.similarity import _emb, lsh_bucket
 
     v = _emb(spark, sf_dir).select("vec_id", scaled_vec("embedding").alias("sv"))
     nb = _semdedup_bits(v.count())  # one bounded driver scalar
-
-    def bucket_bit(j: int):
-        plane = F.array(*[F.lit(c) for c in _plane_components(j)]).cast(
-            "array<bigint>"
-        )
-        dot = F.aggregate(
-            F.zip_with(F.col("sv"), plane, lambda x, p: x * p),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        return (dot > 0).cast("bigint") * (1 << j)
-
-    bucket = sum(
-        [bucket_bit(j) for j in range(nb)], start=F.lit(0).cast("bigint")
-    )
     # 3 consumers downstream (pair-join both sides + sizes): checkpoint so
     # the embeddings scan + scaled_vec projection runs once, not per branch
-    return v.withColumn("cell", bucket).localCheckpoint(eager=True)
+    return v.withColumn("cell", lsh_bucket(nb)).localCheckpoint(eager=True)
 
 
 def _register_dedup_semantic_cells() -> None:

@@ -18,7 +18,7 @@ candidate set per bucket.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -115,6 +115,22 @@ def _plane_components(j: int, dim: int = LSH_DIM) -> list[int]:
     ]
 
 
+def lsh_bucket(n_bits: int) -> Column:
+    """Sign-bit bucket of the scaled vector ``sv``: bit j is set when
+    ``sv`` lies on the positive side of hyperplane j, for j < n_bits."""
+
+    def bucket_bit(j: int):
+        plane = F.array(*[F.lit(c) for c in _plane_components(j)]).cast("array<bigint>")
+        dot = F.aggregate(
+            F.zip_with(F.col("sv"), plane, lambda x, p: x * p),
+            F.lit(0).cast("bigint"),
+            lambda acc, x: acc + x,
+        )
+        return (dot > 0).cast("bigint") * (1 << j)
+
+    return sum([bucket_bit(j) for j in range(n_bits)], start=F.lit(0).cast("bigint"))
+
+
 def _lsh_oracle() -> str:
     planes = [_plane_components(j) for j in range(N_PLANES)]
     bucket_terms = " + ".join(
@@ -156,17 +172,7 @@ def similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     v = emb.select("vec_id", scaled_vec("embedding").alias("sv"))
 
-    def bucket_bit(j: int):
-        plane = F.array(*[F.lit(c) for c in _plane_components(j)]).cast("array<bigint>")
-        dot = F.aggregate(
-            F.zip_with(F.col("sv"), plane, lambda x, p: x * p),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        return (dot > 0).cast("bigint") * (1 << j)
-
-    bucket = sum([bucket_bit(j) for j in range(N_PLANES)], start=F.lit(0).cast("bigint"))
-    bucketed = v.withColumn("bucket", bucket).withColumn(
+    bucketed = v.withColumn("bucket", lsh_bucket(N_PLANES)).withColumn(
         "n2", norm2_long(F.col("sv"))
     )
     q = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
