@@ -55,13 +55,9 @@ def cmd_dump(args: argparse.Namespace) -> int:
         print("dump requires --audit-log <file> or --audit-log-table <table>")
         return 1
     else:
-        if getattr(args, "single_line", False):
-            # fast path for logs known to hold one record per line: a pure
-            # DataFrame text scan, no Python-RDD reassembly passes
-            records = spark.read.text(args.audit_log).withColumnRenamed("value", "record")
-        else:
-            records = al.reassemble_log_records(spark, args.audit_log)
-        stmts = al.extract_statements(records)
+        stmts = al.extract_statements(
+            al.reassemble_log_records(spark, args.audit_log)
+        )
     stmts = al.filter_statements(
         stmts,
         only_select=args.only_select,
@@ -1008,11 +1004,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="scan statement records from a parquet path or "
                    "registered table instead of a log file (reference "
                    "--audit-log-table)")
-    d.add_argument(
-        "--single-line",
-        action="store_true",
-        help="skip multiline reassembly (one record per line; ~2x faster)",
-    )
     d.add_argument("--output", required=True)
     d.add_argument("--only-select", action="store_true")
     d.add_argument("--dbs"), d.add_argument("--users")

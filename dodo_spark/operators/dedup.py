@@ -263,7 +263,6 @@ def simhash_arrow(df) -> DataFrame:
     groupBy form. Bit-equal to the expression kernel (fuzz test in
     tests/test_parity.py): md5 hex[:4] as int == first 2 digest bytes
     big-endian; vote +1 iff (h >> k) & 1 else -1; bit k set iff vote > 0."""
-    import pyarrow as pa
     from pyspark.sql import types as T
 
     in_fields = {f.name: f for f in df.schema.fields}

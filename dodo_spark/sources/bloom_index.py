@@ -38,17 +38,18 @@ from pyspark.sql import functions as F
 
 from dodo_spark.operators.runtime_filter import BLOOM_K, BLOOM_M_BITS
 from dodo_spark.sources.versioned import (
+    _canon_file_ref,
     _check_commit_order,
     _check_retired_names,
     _commit,
-    _first_add_versions,
+    _footer_schema,
     _join,
+    _Log,
     _logical_read,
-    _read_manifest,
     _rename_triples,
-    _schema_events_upto,
+    _schema_cache_get,
+    _schema_cache_put,
     _write_data_files,
-    list_versions,
     logical_schema,
 )
 
@@ -84,7 +85,6 @@ def bloom_words_for_files(
     the read-back footer-inference job (the files are this commit's
     own output — the schema is known exactly)."""
     from dodo_spark.operators.runtime_filter import _h1_h2, _positions
-    from dodo_spark.sources.versioned import _canon_file_ref
 
     reader = spark.read
     if schema is not None:
@@ -141,15 +141,12 @@ def write_version_bloom_indexed(
     """Commit ``df`` as ``version`` hash-partitioned on ``index_col``
     into ``n_files`` files, with a per-file bloom bitmap of the column
     stored in the manifest. Returns {"files", "indexed_col"}."""
-    versions = _check_commit_order(table_path, version)
+    log = _check_commit_order(table_path, version)
     _check_retired_names(
-        table_path, versions, df.columns, "write_version_bloom_indexed"
+        table_path, log.events(log.latest), df.columns,
+        "write_version_bloom_indexed",
     )
-    prev_live = []
-    if versions:
-        from dodo_spark.sources.versioned import live_files
-
-        prev_live = live_files(table_path, versions[-1])
+    prev_live = log.live(log.latest)
     add = _write_data_files(
         df.repartition(n_files, F.col(index_col)), table_path, version
     )
@@ -191,14 +188,15 @@ def append_version_bloom_indexed(
     is hash-partitioned on the index column like the writer, so within
     this commit a key lives in one file; across commits a key may live
     in one file PER COMMIT (the lookup scans each passing file)."""
-    versions = _check_commit_order(table_path, version)
-    if not versions:
+    log = _check_commit_order(table_path, version)
+    if not log.versions:
         raise ValueError(
             f"no committed versions at {table_path}; use "
             "write_version_bloom_indexed for the initial commit"
         )
     _check_retired_names(
-        table_path, versions, df.columns, "append_version_bloom_indexed"
+        table_path, log.events(log.latest), df.columns,
+        "append_version_bloom_indexed",
     )
     add = _write_data_files(
         df.repartition(n_files, F.col(index_col)), table_path, version
@@ -272,14 +270,12 @@ def read_point_lookup(
     files, filter exactly. Returns (rows_df, {"files_total",
     "files_scanned"}). Falls back to scanning files without an index
     entry (never skips blind)."""
-    versions = list_versions(table_path)
-    if not versions:
+    log = _Log(table_path)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
     if version is None:
-        version = max(versions)
-    from dodo_spark.sources.versioned import live_files
-
-    files = live_files(table_path, version)
+        version = log.latest
+    files = log.live(version)
     if not files:
         raise ValueError(
             f"version {version} at {table_path} has no live files"
@@ -290,11 +286,9 @@ def read_point_lookup(
     # rule _logical_read applies to the data files (bitmaps hash
     # rendered VALUES, so they survive the rename unchanged). Without
     # the mapping, probing a renamed-then-reused name could silently
-    # bind the filter to the WRONG column. Chain + first-add computed
-    # ONCE and threaded into every _logical_read below.
-    events = _schema_events_upto(table_path, version)
+    # bind the filter to the WRONG column.
+    events = log.events(version)
     renames = _rename_triples(events)
-    first_add = _first_add_versions(table_path, version) if events else {}
 
     def logical_of(name: str, at_version: int) -> str:
         for rv, frm, to in renames:
@@ -305,10 +299,7 @@ def read_point_lookup(
     # index entries live in the manifest of each file's ADDING commit
     idx: dict[str, tuple[dict, str, int, int]] = {}
     col = None
-    for v in versions:
-        if v > version:
-            break
-        m = _read_manifest(table_path, v)
+    for v, m in log.manifests(version):
         bi = m.get("bloom_index")
         if not bi:
             continue
@@ -327,20 +318,12 @@ def read_point_lookup(
     # O(live files) footer merge — round-9 advisor finding).
 
     def merged_schema():
-        return logical_schema(
-            spark, table_path, files, version, events, first_add
-        )
+        return logical_schema(spark, log, files, version)
 
     if not events:
         # memoized in versioned's commit-purged schema cache under a
         # 3-tuple key (the purge matches on (path, version) prefix), so
         # repeated lookups at one version pay the single footer read once
-        from dodo_spark.sources.versioned import (
-            _footer_schema,
-            _schema_cache_get,
-            _schema_cache_put,
-        )
-
         ck = (table_path, version, "bloom_probe_fast")
         schema = _schema_cache_get(ck)
         if schema is None:
@@ -407,9 +390,9 @@ def read_point_lookup(
         return empty_frame(), stats
     # _logical_read: every vintage's physical names (the index column's
     # included) resolve to the logical schema, matching the mapped filter
-    out = _logical_read(
-        spark, table_path, scan_files, version, events, first_add
-    ).filter(F.col(col) == F.lit(value))
+    out = _logical_read(spark, log, scan_files, version).filter(
+        F.col(col) == F.lit(value)
+    )
     return out, stats
 
 

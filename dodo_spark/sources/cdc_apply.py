@@ -39,11 +39,19 @@ from pyspark.sql.window import Window
 
 from dodo_spark.sources.versioned import (
     CommitConflict,
+    _bloom_rebuild_extra,
+    _canon_file_ref,
     _check_commit_order,
+    _check_no_active_dvs,
+    _check_retired_names,
     _commit,
+    _files_rows_bound,
     _join,
+    _logical_read,
+    _overlaps,
+    _prune_by_stats,
     _write_data_files,
-    file_stats,
+    check_expectations,
     list_versions,
     live_files,
     read_version,
@@ -76,28 +84,15 @@ def apply_cdc_batch(
     # order matters: the replay check FIRST, so a re-delivered
     # already-committed batch skips cheaply (and can never be wedged by
     # expectations tightened after its commit), THEN the gate
-    versions = _check_commit_order(table_path, version)
+    log = _check_commit_order(table_path, version)
     if expectations:
-        from dodo_spark.sources.versioned import check_expectations
-
         check_expectations(changes, expectations)
     # copy-on-write rewriter: like delete_where/merge_upsert/compact,
     # reading live files RAW under an active MoR deletion vector would
     # resurrect DV-masked rows at a newer version — refuse up front
-    from dodo_spark.sources.versioned import (
-        _check_no_active_dvs,
-        _check_retired_names,
-        _rename_triples,
-        _schema_events_upto,
-    )
-
-    _check_no_active_dvs(table_path, versions, "apply_cdc_batch")
-    events: list = (
-        _schema_events_upto(table_path, versions[-1]) if versions else []
-    )
-    renames = _rename_triples(events)
+    _check_no_active_dvs(log, "apply_cdc_batch")
     _check_retired_names(
-        table_path, versions, changes.columns, "apply_cdc_batch", events
+        table_path, log.events(log.latest), changes.columns, "apply_cdc_batch"
     )
 
     w = Window.partitionBy(key).orderBy(F.col(seq_col).desc())
@@ -109,16 +104,9 @@ def apply_cdc_batch(
     )
 
     touched: list[str] = []
-    first_add: dict = {}
     n_incoming: int | None = None
-    if versions:
-        from dodo_spark.sources.versioned import (
-            _first_add_versions,
-            _logical_read,
-            _physical_name,
-        )
-
-        prev_live = live_files(table_path, versions[-1])
+    if log.versions:
+        prev_live = log.live(log.latest)
         paths = {f: _join(table_path, f) for f in prev_live}
         keys_df = F.broadcast(incoming.select(key).distinct())
         # one job: key bounds for footer-stats skipping + the batch row
@@ -129,38 +117,15 @@ def apply_cdc_batch(
             F.count(F.lit(1)).alias("n"),
         ).first()
         n_incoming = int(bounds["n"])
-        stats = file_stats(table_path, versions[-1])
         # rename-aware like merge_upsert: the batch's key is the LOGICAL
-        # name — stats are recorded per file under its PHYSICAL name, and
-        # the probe/rewrite reads must resolve old vintages to the
+        # name, and the probe/rewrite reads resolve old vintages to the
         # logical schema or the semi-join key would be unresolvable
-        first_add = (
-            _first_add_versions(table_path, versions[-1]) if events else {}
+        candidates, _ = _prune_by_stats(
+            log, log.latest, prev_live, key,
+            _overlaps(bounds["lo"], bounds["hi"]),
         )
-
-        def _phys(f: str) -> str:
-            return (
-                _physical_name(key, first_add.get(f, versions[-1]), renames)
-                if renames
-                else key
-            )
-
-        candidates = [
-            f
-            for f in prev_live
-            if _phys(f) not in stats.get(f, {})
-            or bounds["lo"] is None
-            or not (
-                stats[f][_phys(f)][0] > bounds["hi"]
-                or stats[f][_phys(f)][1] < bounds["lo"]
-            )
-        ]
         if candidates:
-            probe = _logical_read(
-                spark, table_path, candidates, versions[-1], events, first_add
-            )
-            from dodo_spark.sources.versioned import _canon_file_ref
-
+            probe = _logical_read(spark, log, candidates, log.latest)
             hit = {
                 _canon_file_ref(r["f"])
                 for r in probe.join(keys_df, key, "semi")
@@ -173,11 +138,7 @@ def apply_cdc_batch(
             ]
 
     if touched:
-        from dodo_spark.sources.versioned import _logical_read
-
-        existing = _logical_read(
-            spark, table_path, touched, versions[-1], events, first_add
-        )
+        existing = _logical_read(spark, log, touched, log.latest)
         # latest-wins across stored state and batch; on an (impossible
         # with unique seqs, but defensive) tie the STORED row wins, so
         # re-applying identical content is a no-op
@@ -198,8 +159,6 @@ def apply_cdc_batch(
         n_incoming = incoming.count()  # first batch: no bounds agg ran
     # the checkpointed batch blocks the automatic plan walk; the provable
     # bound is |batch| + the touched files' exact footer row counts
-    from dodo_spark.sources.versioned import _files_rows_bound
-
     touched_rows = _files_rows_bound(table_path, touched)
     bound = n_incoming + touched_rows if touched_rows is not None else None
     add = _write_data_files(winners, table_path, version, rows_bound=bound)
@@ -277,41 +236,16 @@ def purge_tombstones(
     older versions still read their tombstones (time travel unchanged).
     An idempotent no-op (nothing purgeable) still publishes an empty
     manifest so the caller's version numbering stays monotone."""
-    versions = _check_commit_order(table_path, version)
-    if not versions:
+    log = _check_commit_order(table_path, version)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
-    from dodo_spark.sources.versioned import _check_no_active_dvs
-
-    _check_no_active_dvs(table_path, versions, "purge_tombstones")
-    from dodo_spark.sources.versioned import (
-        _first_add_versions,
-        _logical_read,
-        _physical_name,
-        _rename_triples,
-        _schema_events_upto,
+    _check_no_active_dvs(log, "purge_tombstones")
+    # a file can hold a purgeable tombstone only if its smallest seq is
+    # below the horizon ('deleted'/seq_col bind logical names)
+    candidates, _ = _prune_by_stats(
+        log, log.latest, log.live(log.latest), seq_col,
+        lambda lo, _hi: lo < seq_horizon,
     )
-
-    prev_live = live_files(table_path, versions[-1])
-    stats = file_stats(table_path, versions[-1])
-    # rename-aware: 'deleted'/seq_col bind logical names; stats are
-    # recorded under each file's physical names
-    events = _schema_events_upto(table_path, versions[-1])
-    renames = _rename_triples(events)
-    first_add = _first_add_versions(table_path, versions[-1]) if events else {}
-
-    def _phys_seq(f: str) -> str:
-        return (
-            _physical_name(seq_col, first_add.get(f, versions[-1]), renames)
-            if renames
-            else seq_col
-        )
-
-    candidates = [
-        f
-        for f in prev_live
-        if _phys_seq(f) not in stats.get(f, {})
-        or stats[f][_phys_seq(f)][0] < seq_horizon
-    ]
     touched: list[str] = []
     purged = 0
     # null-safe doom predicate: a row with NULL deleted/seq must SURVIVE
@@ -321,13 +255,9 @@ def purge_tombstones(
         F.lit(False),
     )
     if candidates:
-        from dodo_spark.sources.versioned import _canon_file_ref
-
         paths = {f: _join(table_path, f) for f in candidates}
         hits = (
-            _logical_read(
-                spark, table_path, candidates, versions[-1], events, first_add
-            )
+            _logical_read(spark, log, candidates, log.latest)
             .filter(doomed)
             .groupBy(F.input_file_name().alias("f"))
             .agg(F.count("*").alias("n"))
@@ -339,17 +269,13 @@ def purge_tombstones(
     add: list[str] = []
     extra = None
     if touched:
-        survivors = _logical_read(
-            spark, table_path, touched, versions[-1], events, first_add
-        ).filter(~doomed)
+        survivors = _logical_read(spark, log, touched, log.latest).filter(
+            ~doomed
+        )
         add = _write_data_files(survivors, table_path, version)
         # a purge is a bulk rewrite: maintain any manifest bloom index
         # for the rewritten files like compact_files does
-        from dodo_spark.sources.versioned import _bloom_rebuild_extra
-
-        extra = _bloom_rebuild_extra(
-            spark, table_path, versions, add, survivors.schema
-        )
+        extra = _bloom_rebuild_extra(spark, log, add, survivors.schema)
     _commit(table_path, version, add=add, remove=touched, extra=extra)
     return {"files_rewritten": len(touched), "tombstones_purged": int(purged)}
 

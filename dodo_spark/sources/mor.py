@@ -39,28 +39,19 @@ from pyspark.sql import functions as F
 
 from dodo_spark.sources.versioned import (
     _check_commit_order,
-    _check_not_vacuumed,
     _commit,
-    _fs_for,
+    _driver_write_qualifies,
+    _files_rows_bound,
     _join,
+    _Log,
+    _logical_read,
     _read_manifest,
-    list_versions,
-    live_files,
-    read_version,
+    _write_data_files_ex,
+    _write_version,
     write_version,
 )
 
 __all__ = ["delete_where_mor", "read_with_deletes", "purge_deletes"]
-
-
-def _dv_entries(table_path: str, versions: list[int]) -> list[tuple[int, list[str], str]]:
-    """[(version, dv_files, key)] for every DV commit, ascending."""
-    out = []
-    for v in versions:
-        m = _read_manifest(table_path, v)
-        if m.get("dv"):
-            out.append((v, m["dv"], m["dv_key"]))
-    return out
 
 
 def delete_where_mor(
@@ -75,53 +66,32 @@ def delete_where_mor(
     already-deleted rows don't re-match) as a DV sidecar and publish a
     manifest that adds/removes NO data files. Returns
     {"dv_files", "keys_deleted"}."""
-    import uuid
-
-    versions = _check_commit_order(table_path, version)
-    if not versions:
+    log = _check_commit_order(table_path, version)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
-    cur = read_with_deletes(spark, table_path, max(versions))
-    keys_df = cur.filter(predicate).select(key).distinct()
-    attempt = f"v={version}/dv-{uuid.uuid4().hex[:12]}"
-    snap = _join(table_path, attempt)
-    # small-DV fast path (r14): the matched key set is bounded by the
-    # live files' exact footer row counts; within the small-commit
-    # budget it is written by the driver in one file — and its row count
-    # comes for free, saving the read-back count job the distributed
-    # path pays. Same visibility/zombie argument as _write_data_files:
-    # the sidecar only becomes live via the manifest put-if-absent.
-    from dodo_spark.sources.versioned import (
-        _driver_write_qualifies,
-        _files_rows_bound,
-        _local_path,
-        _write_arrow_file,
+    _, live = log.resolve(log.latest)
+    keys_df = (
+        apply_dvs_to_files(spark, log, live, log.latest)
+        .filter(predicate)
+        .select(key)
+        .distinct()
     )
-
-    live = live_files(table_path, max(versions))
-    bound = _files_rows_bound(table_path, live)
-    n: int | None = None
-    files: list[str] = []
-    if _driver_write_qualifies(snap, bound):
-        tbl = keys_df.toArrow()
-        if tbl.num_rows > 0:
-            name = _write_arrow_file(keys_df, tbl, _local_path(snap))
-            files = [f"{attempt}/{name}"]
-            n = tbl.num_rows
-        # 0 matched keys: fall through to the distributed writer so the
-        # sidecar/manifest shape stays identical to the historical form
+    # the sidecar goes through the data-file writer under
+    # ``v=<n>/dv-<uuid>/``: the matched key set is bounded by the live
+    # files' exact footer row counts, so within the small-commit budget
+    # the driver writes it as one file and its row count comes for free
+    # (no read-back count job). It becomes live only via the manifest
+    # put-if-absent, like any data file.
+    files, n = _write_data_files_ex(
+        keys_df, table_path, version,
+        rows_bound=_files_rows_bound(table_path, live), kind="dv",
+    )
     if n is None:
-        keys_df.write.mode("overwrite").parquet(snap)
-        fs = _fs_for(table_path)
-        files = sorted(
-            f"{attempt}/{name}"
-            for name in fs.list_names(snap)
-            if name.endswith(".parquet")
-        )
         # the written files' footer row counts when local; a count job
         # off-box
         n = _files_rows_bound(table_path, files)
-        if n is None:
-            n = spark.read.parquet(snap).count()
+    if n is None:
+        n = spark.read.parquet(*[_join(table_path, f) for f in files]).count()
     _commit(
         table_path,
         version,
@@ -139,64 +109,27 @@ def read_with_deletes(
     Iceberg sequencing rule: a DV at v' masks only rows in files added
     at versions < v'. Reading an OLDER version applies only the DVs
     that existed then."""
-    versions = list_versions(table_path)
-    if not versions:
-        raise ValueError(f"no committed versions at {table_path}")
-    if version is None:
-        version = max(versions)
-    if version not in versions:
-        raise ValueError(f"version {version} not in {versions} at {table_path}")
-    files = live_files(table_path, version)
-    if not files:
-        raise ValueError(f"version {version} at {table_path} has no live files")
-    _check_not_vacuumed(table_path, version, files, versions)
-    return apply_dvs_to_files(spark, table_path, files, version, versions)
+    log = _Log(table_path)
+    version, files = log.resolve(version)
+    return apply_dvs_to_files(spark, log, files, version)
 
 
 def apply_dvs_to_files(
-    spark: SparkSession,
-    table_path: str,
-    files: list[str],
-    version: int,
-    versions: list[int] | None = None,
+    spark: SparkSession, log: _Log, files: list[str], version: int
 ) -> DataFrame:
     """Scan an EXPLICIT file list with every DV committed at <= version
     applied under the sequencing rule — the visible-rows primitive
     shared by read_with_deletes (the live set) and read_changes (a
     rewriting commit's removed files, which must be netted at their
     PRIOR-version visibility or a purge after a MoR delete
-    double-subtracts the masked rows)."""
-    versions = versions if versions is not None else list_versions(table_path)
-    # ONE manifest pass collects both the DV list and the per-file
-    # generations (latest re-add <= version, the Iceberg
-    # sequence-number-on-re-add rule — a restore's re-add bumps the
-    # generation past older DVs, so RESTORE truly undoes a MoR delete
-    # while older reads keep it). On an object store every manifest read
-    # is a GET; splitting this into _dv_entries + _file_generations paid
-    # it twice per read (round-8 review finding).
-    dvs: list[tuple[int, list[str], str]] = []
-    gens: dict[str, int] = {}
-    for v in versions:
-        if v > version:
-            break
-        m = _read_manifest(table_path, v)
-        for f in m.get("add", []):
-            gens[f] = v
-        if m.get("dv"):
-            dvs.append((v, m["dv"], m["dv_key"]))
-
-    from dodo_spark.sources.versioned import (
-        _first_add_versions,
-        _logical_read,
-        _schema_events_upto,
-    )
-
-    # event chain + first-add map computed ONCE and threaded into every
-    # scan below — without this, each generation's data scan AND each DV
-    # sidecar read re-listed the directory and re-replayed the manifests
-    # on schema-evolved tables (round-9 advisor finding)
-    events = _schema_events_upto(table_path, version)
-    first_add = _first_add_versions(table_path, version) if events else {}
+    double-subtracts the masked rows). DV list, per-file generations
+    (the Iceberg sequence-number-on-re-add rule — a restore's re-add
+    bumps the generation past older DVs, so RESTORE truly undoes a MoR
+    delete while older reads keep it) and the schema-event chain all
+    come from the operation's log snapshot, which reads each manifest
+    once."""
+    dvs = log.dvs(version)
+    gens = log.generations(version)
 
     def _scan(paths: list[str]) -> DataFrame:
         # logical names at ``version``. DV sidecars (never in any "add"
@@ -204,15 +137,13 @@ def apply_dvs_to_files(
         # while a DV is active, so a live DV's key column was recorded
         # under the CURRENT logical name; an inert historical DV is only
         # read by time travel to versions before any later schema event.
-        return _logical_read(
-            spark, table_path, paths, version, events, first_add
-        )
+        return _logical_read(spark, log, paths, version)
 
     if not dvs:
         return _scan(files)
     keys = {k for (_v, _f, k) in dvs}
     if len(keys) > 1:
-        raise ValueError(f"mixed dv keys at {table_path}: {sorted(keys)}")
+        raise ValueError(f"mixed dv keys at {log.path}: {sorted(keys)}")
     key = keys.pop()
 
     # group files by the SET of DVs that apply (files between two
@@ -247,24 +178,21 @@ def purge_deletes(
     earlier DV applies to anything live — the sequencing rule IS the
     reset. Old DV sidecars stay manifest-referenced (time travel to
     pre-purge versions still applies them) and inert for new reads."""
-    latest = read_with_deletes(spark, table_path)
-    # write_version computes the remove side itself; the masked view is
+    log = _check_commit_order(table_path, version)
+    if not log.versions:
+        raise ValueError(f"no committed versions at {table_path}")
+    _, live = log.resolve(log.latest)
+    latest = apply_dvs_to_files(spark, log, live, log.latest)
+    # the replace commit removes the live set itself; the masked view is
     # pinned before the commit starts mutating state. The DV anti-join
     # hides the scan from the automatic small-commit bound, so pass the
     # provable one: masked view <= live footer rows. Within it the
     # driver fast path's single Arrow collect is the pin; otherwise an
     # eager localCheckpoint is.
-    from dodo_spark.sources.versioned import (
-        _driver_write_qualifies,
-        _files_rows_bound,
-    )
-
-    bound = _files_rows_bound(
-        table_path, live_files(table_path, max(list_versions(table_path)))
-    )
+    bound = _files_rows_bound(table_path, live)
     if not _driver_write_qualifies(table_path, bound):
         latest = latest.localCheckpoint(eager=True)
-    return write_version(latest, table_path, version, rows_bound=bound)
+    return _write_version(latest, log, version, rows_bound=bound)
 
 
 # ---------------------------------------------------------------------------

@@ -604,20 +604,243 @@ def _version_manifest_path(table_path: str, version: int) -> str:
     return _join(table_path, f"{_MANIFEST_PREFIX}{version}.json")
 
 
-def _read_manifest(table_path: str, version: int, fs=None) -> dict:
-    fs = fs or _fs_for(table_path)
-    return json.loads(fs.read_text(_version_manifest_path(table_path, version)))
+def _read_manifest(table_path: str, version: int) -> dict:
+    return json.loads(
+        _fs_for(table_path).read_text(_version_manifest_path(table_path, version))
+    )
+
+
+def _checkpoint_path(table_path: str, version: int) -> str:
+    return _join(table_path, f"{_CHECKPOINT_PREFIX}{version}.json")
+
+
+class _Log:
+    """One operation's read-only snapshot of a table's commit log. The
+    table root is listed ONCE, when the snapshot is built; each
+    manifest, checkpoint payload and vacuum marker is read at most once,
+    on first use. Every metadata question an operation asks (committed
+    versions, live sets, schema events, first-add versions, file stats,
+    deletion vectors, vacuum markers) is answered here, so an operation
+    pays one listing plus one read per metadata file it needs. A
+    snapshot never outlives its operation: the next operation builds a
+    fresh one and sees every commit published in between."""
+
+    def __init__(self, table_path: str):
+        self.path = table_path
+        self.fs = _fs_for(table_path)
+        names = self.fs.list_names(table_path)
+        self.versions = _meta_versions(names, _MANIFEST_PREFIX)
+        # the newest committed version; -1 on an empty table, where
+        # every per-version question answers "nothing"
+        self.latest = self.versions[-1] if self.versions else -1
+        self._checkpoints = _meta_versions(names, _CHECKPOINT_PREFIX)
+        self._hints = _meta_versions(names, _RENAME_HINT_PREFIX)
+        self._vacuums = _meta_versions(names, _VACUUM_PREFIX)
+        self._docs: dict[str, dict] = {}
+
+    def _doc(self, name: str) -> dict:
+        if name not in self._docs:
+            self._docs[name] = json.loads(
+                self.fs.read_text(_join(self.path, name))
+            )
+        return self._docs[name]
+
+    def manifest(self, version: int) -> dict:
+        return self._doc(f"{_MANIFEST_PREFIX}{version}.json")
+
+    def manifests(self, version: int, after: int = -1) -> list[tuple[int, dict]]:
+        """``(v, manifest)`` for the committed versions in (after, version]."""
+        return [
+            (v, self.manifest(v)) for v in self.versions if after < v <= version
+        ]
+
+    def checkpoint(self, version: int) -> dict | None:
+        """The payload of the latest checkpoint <= ``version``, or None."""
+        cps = [v for v in self._checkpoints if v <= version]
+        return self._doc(f"{_CHECKPOINT_PREFIX}{max(cps)}.json") if cps else None
+
+    def live(self, version: int) -> list[str]:
+        """The live file set AT ``version``: add/remove algebra replayed
+        over the committed manifests <= version (relative paths, stable
+        order), starting from the latest checkpoint <= version when one
+        exists."""
+        cp = self.checkpoint(version)
+        live = list(cp["live"]) if cp else []
+        for _v, m in self.manifests(version, cp["version"] if cp else -1):
+            removed = set(m.get("remove", []))
+            live = [f for f in live if f not in removed] + list(m.get("add", []))
+        return live
+
+    def events(self, version: int) -> list[tuple[int, str, str, str | None]]:
+        """Cumulative SCHEMA-EVENT chain at ``version``: ascending
+        ``[(event_version, kind, a, b)]`` where kind is ``"rename"``
+        (a=from, b=to), ``"drop"`` (a=column, b=None) or ``"retype"``
+        (a=column, b=target type string). The hint files every
+        metadata-only schema commit publishes before its manifest make
+        "no events" a fact of the listing (ZERO reads: an appending
+        stream never pays for a feature it doesn't use); with hints only
+        the HINTED manifests are read — O(#events), not O(#commits). A
+        hint whose manifest is missing (crashed schema change) or carries
+        no event entry (the hinted version was won by a different racing
+        writer) is skipped. A checkpoint <= ``version`` that records an
+        ``events`` list (every checkpoint since round 11) resumes the
+        chain: only hinted manifests after it are read. Older
+        checkpoints without the field fall back to every hinted
+        manifest."""
+        hinted = [v for v in self._hints if v <= version]
+        if not hinted:
+            return []
+        out: list[tuple[int, str, str, str | None]] = []
+        cp = self.checkpoint(version)
+        if cp is not None and "events" in cp:
+            out = [
+                (int(v), kind, a, b)
+                for v, kind, a, b in cp["events"]
+                if int(v) <= version
+            ]
+            hinted = [v for v in hinted if v > cp["version"]]
+        committed = set(self.versions)
+        for v in hinted:
+            if v not in committed:
+                continue  # crashed schema change: hint published, manifest never won
+            m = self.manifest(v)
+            if m.get("rename"):
+                r = m["rename"]
+                out.append((v, "rename", r["from"], r["to"]))
+            if m.get("drop"):
+                out.append((v, "drop", m["drop"]["column"], None))
+            if m.get("retype"):
+                t = m["retype"]
+                out.append((v, "retype", t["column"], t["to"]))
+        return out
+
+    def first_add(self, version: int) -> dict[str, int]:
+        """Per-file FIRST add version <= ``version``. The schema-event
+        chain keys off this, not the latest re-add (``generations``): a
+        RESTORE's re-add is pure metadata — the file's physical column
+        names were fixed at its ORIGINAL write, so events committed
+        between the original add and the re-add still apply to it.
+        Resumes from the latest checkpoint's recorded map when one
+        exists (first-add is append-only, so a checkpointed prefix is
+        final)."""
+        cp = self.checkpoint(version)
+        first: dict[str, int] = {}
+        after = -1
+        if cp is not None and "first_add" in cp:
+            first = {f: int(v) for f, v in cp["first_add"].items()}
+            after = cp["version"]
+        for v, m in self.manifests(version, after):
+            for f in m.get("add", []):
+                first.setdefault(f, v)
+        return first
+
+    def generations(self, version: int) -> dict[str, int]:
+        """Per-file GENERATION at read version ``version``: the LATEST
+        version <= it whose manifest (re-)adds the file. A RE-ADD —
+        RESTORE's pure-metadata commit — assigns a NEW generation (the
+        Iceberg data-sequence-number-on-re-add rule), so deletion
+        vectors OLDER than the re-add no longer mask the file's rows:
+        restoring to a pre-delete version truly undoes a merge-on-read
+        DELETE, while reads of the intermediate versions still apply
+        it."""
+        gen: dict[str, int] = {}
+        for v, m in self.manifests(version):
+            for f in m.get("add", []):
+                gen[f] = v
+        return gen
+
+    def dvs(self, version: int) -> list[tuple[int, list[str], str]]:
+        """``[(v, dv_files, key)]`` for every deletion-vector commit
+        <= ``version`` (sources/mor.py), ascending."""
+        return [
+            (v, m["dv"], m["dv_key"])
+            for v, m in self.manifests(version)
+            if m.get("dv")
+        ]
+
+    def stats(self, version: int) -> dict:
+        """{relative file -> {column -> [min, max]}} recorded by the
+        manifests <= ``version``."""
+        out: dict[str, dict] = {}
+        for _v, m in self.manifests(version):
+            out.update(m.get("stats", {}))
+        return out
+
+    def vacuum_markers(self) -> list[dict]:
+        return [self._doc(f"{_VACUUM_PREFIX}{n}.json") for n in self._vacuums]
+
+    def check_not_vacuumed(
+        self, version: int, files, what: str | None = None
+    ) -> None:
+        """Vacuum guard over the ``files`` an operation at ``version``
+        opens: they are unreadable iff some vacuum run actually DELETED
+        one of them (recorded in its marker) — versions committed after
+        a vacuum, whose new files were never deletion candidates, pass.
+        Pure metadata (no per-file existence probe). Markers written
+        before the deleted-list field fall back to the kept-set coverage
+        rule, restricted to versions the marker could have affected
+        (nothing newer than its max retained version existed at vacuum
+        time). ``what`` replaces the error's leading clause."""
+        files = set(files)
+        for marker in self.vacuum_markers():
+            deleted = marker.get("deleted")
+            if deleted is not None:
+                swept = bool(files & set(deleted))
+            elif version > max(marker["retained"]):
+                swept = False  # committed after this (legacy) vacuum ran
+            else:
+                kept: set[str] = set()
+                for rv in marker["retained"]:
+                    if rv in self.versions:
+                        kept.update(self.live(rv))
+                swept = not files <= kept
+            if swept:
+                raise ValueError(
+                    f"{what or f'version {version} at {self.path} was vacuumed'}"
+                    f" (retained: {marker['retained']})"
+                )
+
+    def resolve(self, version: int | None) -> tuple[int, list[str]]:
+        """``(version, live files)`` for a read of ``version`` (None =
+        latest): the version must be committed, have live files and not
+        be vacuumed."""
+        if not self.versions:
+            raise ValueError(f"no committed versions at {self.path}")
+        if version is None:
+            version = self.latest
+        if version not in self.versions:
+            raise ValueError(
+                f"version {version} not in {self.versions} at {self.path}"
+            )
+        files = self.live(version)
+        if not files:
+            raise ValueError(
+                f"version {version} at {self.path} has no live files"
+            )
+        self.check_not_vacuumed(version, files)
+        return version, files
 
 
 def list_versions(table_path: str) -> list[int]:
     """Committed versions = the set of published manifest files (one
     immutable put-if-absent file per commit; no secondary log)."""
-    fs = _fs_for(table_path)
-    return _meta_versions(fs.list_names(table_path), _MANIFEST_PREFIX)
+    return _Log(table_path).versions
 
 
-def _checkpoint_path(table_path: str, version: int) -> str:
-    return _join(table_path, f"{_CHECKPOINT_PREFIX}{version}.json")
+def live_files(table_path: str, version: int) -> list[str]:
+    """The live file set AT ``version`` (``_Log.live``)."""
+    return _Log(table_path).live(version)
+
+
+def file_stats(table_path: str, version: int) -> dict:
+    """{relative file -> {column -> [min, max]}} for the committed
+    manifests <= version (files whose commit predates stats support, or
+    whose columns have no footer stats, are simply absent)."""
+    return _Log(table_path).stats(version)
+
+
+def _vacuum_markers(table_path: str) -> list[dict]:
+    return _Log(table_path).vacuum_markers()
 
 
 def checkpoint_manifest(table_path: str, version: int | None = None) -> str:
@@ -628,21 +851,22 @@ def checkpoint_manifest(table_path: str, version: int | None = None) -> str:
     Pure metadata; no data file is read or moved. Idempotent: a
     checkpoint's content is a pure function of the immutable manifests,
     so a lost put-if-absent race is a no-op success."""
-    versions = list_versions(table_path)
-    if not versions:
+    log = _Log(table_path)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
     if version is None:
-        version = max(versions)
-    if version not in versions:
-        raise ValueError(f"version {version} not in {versions} at {table_path}")
+        version = log.latest
+    if version not in log.versions:
+        raise ValueError(
+            f"version {version} not in {log.versions} at {table_path}"
+        )
     path = _checkpoint_path(table_path, version)
-    fs = _fs_for(table_path)
-    fs.put_if_absent_text(
+    log.fs.put_if_absent_text(
         path,
         json.dumps(
             {
                 "version": version,
-                "live": _replay_live(table_path, version, -1, []),
+                "live": log.live(version),
                 # FIRST-add version per file ever added <= version (the
                 # rename chain keys off it). Append-only by definition —
                 # a re-add never changes a file's first add — so later
@@ -650,192 +874,30 @@ def checkpoint_manifest(table_path: str, version: int | None = None) -> str:
                 # the checkpoint. (The rename chain itself needs no
                 # checkpoint acceleration: _rename_hint_ markers make it
                 # O(#renames) from the directory listing alone.)
-                "first_add": _first_add_versions(table_path, version),
+                "first_add": log.first_add(version),
                 # resolved SCHEMA-EVENT chain <= version. Events are an
                 # immutable fact of the committed manifests, so baking
-                # them in lets _schema_events_upto resume here and read
-                # only hinted manifests AFTER the checkpoint — a 100 TB
-                # table with years of schema drift pays O(1), not
-                # O(total events), per read once checkpointed.
-                "events": _schema_events_upto(table_path, version),
+                # them in lets _Log.events resume here and read only
+                # hinted manifests AFTER the checkpoint — a 100 TB table
+                # with years of schema drift pays O(1), not O(total
+                # events), per read once checkpointed.
+                "events": log.events(version),
             }
         ),
     )
     return path
 
 
-def _latest_checkpoint_payload(
-    table_path: str, version: int, fs=None, names: list[str] | None = None
-) -> dict | None:
-    fs = fs or _fs_for(table_path)
-    if names is None:
-        names = fs.list_names(table_path)
-    cps = [
-        v
-        for v in _meta_versions(names, _CHECKPOINT_PREFIX)
-        if v <= version
-    ]
-    if not cps:
-        return None
-    return json.loads(fs.read_text(_checkpoint_path(table_path, max(cps))))
-
-
-def _latest_checkpoint(
-    table_path: str, version: int, fs=None, names: list[str] | None = None
-) -> tuple[int, list[str]] | None:
-    payload = _latest_checkpoint_payload(table_path, version, fs, names)
-    if payload is None:
-        return None
-    return payload["version"], list(payload["live"])
-
-
-def _replay_live(
-    table_path: str,
-    version: int,
-    after: int,
-    base: list[str],
-    fs=None,
-    names: list[str] | None = None,
-) -> list[str]:
-    fs = fs or _fs_for(table_path)
-    if names is None:
-        names = fs.list_names(table_path)
-    live = list(base)
-    for v in [
-        x for x in _meta_versions(names, _MANIFEST_PREFIX) if after < x <= version
-    ]:
-        m = _read_manifest(table_path, v, fs)
-        removed = set(m.get("remove", []))
-        live = [f for f in live if f not in removed] + list(m.get("add", []))
-    return live
-
-
-def live_files(
-    table_path: str, version: int, fs=None, names: list[str] | None = None
-) -> list[str]:
-    """The live file set AT ``version``: add/remove algebra replayed over
-    the committed manifests <= version (relative paths, stable order),
-    starting from the latest checkpoint <= version when one exists.
-    ``fs``/``names`` let a read path reuse one directory listing across
-    every metadata question it asks (the zero-extra-listing contract
-    pinned by tests/test_versioned.py's FS op-counter)."""
-    fs = fs or _fs_for(table_path)
-    if names is None:
-        names = fs.list_names(table_path)
-    cp = _latest_checkpoint(table_path, version, fs, names)
-    if cp is not None:
-        cp_version, base = cp
-        return _replay_live(table_path, version, cp_version, base, fs, names)
-    return _replay_live(table_path, version, -1, [], fs, names)
-
-
 # ---------------------------------------------------------------------------
 # column mapping (RENAME COLUMN as a metadata-only commit)
 # ---------------------------------------------------------------------------
-def _renames_upto(
-    table_path: str, version: int, fs=None, names: list[str] | None = None
-) -> list[tuple[int, str, str]]:
-    """Rename-only convenience over ``_schema_events_upto`` (same hint
-    fast path; same cost) — the shape the pure name-mapping consumers
-    (``_physical_name``, stats-key probes, ``rename_history``) key off."""
-    return _rename_triples(_schema_events_upto(table_path, version, fs, names))
-
-
 def _rename_triples(
     events: list[tuple[int, str, str, str | None]]
 ) -> list[tuple[int, str, str]]:
-    """The rename-only view of a typed event chain."""
+    """The rename-only view of a typed event chain — the shape the pure
+    name-mapping consumers (``_physical_name``, stats-key probes,
+    ``rename_history``) key off."""
     return [(v, a, b) for v, kind, a, b in events if kind == "rename"]
-
-
-def _schema_events_upto(
-    table_path: str, version: int, fs=None, names: list[str] | None = None
-) -> list[tuple[int, str, str, str | None]]:
-    """Cumulative SCHEMA-EVENT chain at ``version``: ascending
-    ``[(event_version, kind, a, b)]`` where kind is ``"rename"``
-    (a=from, b=to), ``"drop"`` (a=column, b=None) or ``"retype"``
-    (a=column, b=target type string). Cost is deliberately asymmetric:
-    the hint files every metadata-only schema commit publishes before
-    its manifest make "no events" a pure directory-listing fact (the
-    listing every caller's neighboring metadata op already fetches,
-    passable via ``names`` so a read path lists once; ZERO manifest
-    reads — an appending stream never pays for a feature it doesn't
-    use), and with hints present only the HINTED manifests are read —
-    O(#events), not O(#commits). A hint whose manifest is missing
-    (crashed schema change) or carries no event entry (the hinted
-    version was won by a different racing writer) is skipped.
-
-    When a checkpoint <= ``version`` records an ``events`` list (every
-    checkpoint since round 11 does), the chain RESUMES from it: only
-    hinted manifests after the checkpoint are read, so a long-drifted
-    table pays O(events since checkpoint), flat in total chain length.
-    Pre-r11 checkpoints without the field fall back to reading every
-    hinted manifest."""
-    fs = fs or _fs_for(table_path)
-    if names is None:
-        names = fs.list_names(table_path)
-    hinted = [
-        v
-        for v in _meta_versions(names, _RENAME_HINT_PREFIX)
-        if v <= version
-    ]
-    if not hinted:
-        return []
-    out: list[tuple[int, str, str, str | None]] = []
-    after = -1
-    payload = _latest_checkpoint_payload(table_path, version, fs, names)
-    if payload is not None and "events" in payload:
-        out = [
-            (int(v), kind, a, b)
-            for v, kind, a, b in payload["events"]
-            if int(v) <= version
-        ]
-        after = payload["version"]
-        hinted = [v for v in hinted if v > after]
-        if not hinted:
-            return out
-    committed = set(_meta_versions(names, _MANIFEST_PREFIX))
-    for v in hinted:
-        if v not in committed:
-            continue  # crashed schema change: hint published, manifest never won
-        m = _read_manifest(table_path, v, fs)
-        if m.get("rename"):
-            r = m["rename"]
-            out.append((v, "rename", r["from"], r["to"]))
-        if m.get("drop"):
-            out.append((v, "drop", m["drop"]["column"], None))
-        if m.get("retype"):
-            t = m["retype"]
-            out.append((v, "retype", t["column"], t["to"]))
-    return out
-
-
-def _first_add_versions(
-    table_path: str, version: int, fs=None, names: list[str] | None = None
-) -> dict[str, int]:
-    """Per-file FIRST add version <= ``version``. The rename chain keys
-    off this, not the latest re-add (``_file_generations``): a RESTORE's
-    re-add is pure metadata — the file's physical column names were
-    fixed at its ORIGINAL write, so renames committed between the
-    original add and the re-add still apply to it. Resumes from the
-    latest checkpoint's recorded map when one exists (first-add is
-    append-only, so a checkpointed prefix is final), keeping the
-    metadata cost O(commits since checkpoint)."""
-    fs = fs or _fs_for(table_path)
-    if names is None:
-        names = fs.list_names(table_path)
-    first: dict[str, int] = {}
-    after = -1
-    payload = _latest_checkpoint_payload(table_path, version, fs, names)
-    if payload is not None and "first_add" in payload:
-        first = {f: int(v) for f, v in payload["first_add"].items()}
-        after = payload["version"]
-    for v in _meta_versions(names, _MANIFEST_PREFIX):
-        if v <= after or v > version:
-            continue
-        for f in _read_manifest(table_path, v, fs).get("add", []):
-            first.setdefault(f, v)
-    return first
 
 
 def _physical_name(
@@ -851,13 +913,37 @@ def _physical_name(
     return name
 
 
+def _prune_by_stats(
+    log: _Log, version: int, files: list[str], column: str, keep
+) -> tuple[list[str], list[str]]:
+    """Split ``files`` (live at ``version``) into (candidates, skipped)
+    by the manifest-recorded footer [min, max] of LOGICAL ``column``: a
+    file is skipped only when it has a recorded range and
+    ``keep(lo, hi)`` is false; files without stats stay candidates.
+    Footer stats are keyed by each file's PHYSICAL column name, so the
+    column maps through the rename chain per file (pre-rename files keep
+    pruning under the new name). The one data-skipping rule behind
+    ``prune_files_by_stats``, merge_upsert's probe and the CDC apply and
+    tombstone purge (sources/cdc_apply.py). Pure metadata."""
+    stats = log.stats(version)
+    renames = _rename_triples(log.events(version))
+    first_add = log.first_add(version) if renames else {}
+    candidates, skipped = [], []
+    for f in files:
+        phys = _physical_name(column, first_add.get(f, version), renames)
+        rng = stats.get(f, {}).get(phys)
+        (candidates if rng is None or keep(*rng) else skipped).append(f)
+    return candidates, skipped
+
+
+def _overlaps(lo, hi):
+    """``_prune_by_stats`` keep test: the file's range overlaps
+    [lo, hi]; an empty key set (lo None) keeps every file."""
+    return lambda a, b: lo is None or not (a > hi or b < lo)
+
+
 def _logical_read(
-    spark: SparkSession,
-    table_path: str,
-    files: list[str],
-    version: int,
-    events: list[tuple[int, str, str, str | None]] | None = None,
-    first_add: dict[str, int] | None = None,
+    spark: SparkSession, log: _Log, files: list[str], version: int
 ) -> DataFrame:
     """Scan an explicit file list presenting the LOGICAL schema at
     ``version`` — the single choke point every multi-file read in this
@@ -866,33 +952,29 @@ def _logical_read(
     when every file carries the same Spark schema there
     (``_shared_footer_schema`` — no inference job, the same schema);
     otherwise (off-box, keyless files, additive evolution) it is the
-    ``mergeSchema`` scan. Without renames that is one scan (fast
-    path: one checkpoint probe, zero extra manifest reads on
-    checkpointed tables). With renames, files written under an older
-    name are grouped by the rename chain that applies to them (renames
-    committed AFTER the file's first add), each group is renamed to
-    logical names, and the groups union by name — the Iceberg
+    ``mergeSchema`` scan. Without schema events that is one scan. With
+    events, files are grouped by the event chain that applies to them
+    (events committed AFTER the file's first add), each group is renamed
+    to logical names, and the groups union by name — the Iceberg
     name-mapping / Delta column-mapping semantics without rewriting a
     byte. Total I/O = the file list once, same as the plain scan; the
-    per-group rename is a zero-cost projection. Callers that already
-    computed the chain / first-add map for their own bookkeeping pass
-    them in so one operation pays the metadata scan once."""
+    per-group rename is a zero-cost projection. The event chain and
+    first-add map come from the operation's log snapshot, so repeated
+    reads in one operation add no metadata I/O."""
 
     def scan(paths: list[str]) -> DataFrame:
-        full = [_join(table_path, f) for f in paths]
+        full = [_join(log.path, f) for f in paths]
         schema = _shared_footer_schema(full)
         if schema is None:
             return spark.read.option("mergeSchema", "true").parquet(*full)
         return spark.read.schema(schema).parquet(*full)
 
-    if events is None:
-        events = _schema_events_upto(table_path, version)
+    events = log.events(version)
     if not events:
         return scan(files)
     from pyspark.sql import functions as F
 
-    if first_add is None:
-        first_add = _first_add_versions(table_path, version)
+    first_add = log.first_add(version)
     groups: dict[tuple, list[str]] = {}
     for f in files:
         addv = first_add.get(f, version)
@@ -973,27 +1055,20 @@ def _schema_cache_get(key: tuple):
 
 
 def logical_schema(
-    spark: SparkSession,
-    table_path: str,
-    files: list[str],
-    version: int,
-    events: list[tuple[int, str, str, str | None]] | None = None,
-    first_add: dict[str, int] | None = None,
+    spark: SparkSession, log: _Log, files: list[str], version: int
 ):
     """The merged LOGICAL StructType at ``version`` (exactly
     ``_logical_read(...).schema``), memoized per (table_path, version)."""
-    key = (table_path, version)
+    key = (log.path, version)
     hit = _schema_cache_get(key)
     if hit is not None:
         return hit
-    schema = _logical_read(
-        spark, table_path, files, version, events, first_add
-    ).schema
+    schema = _logical_read(spark, log, files, version).schema
     _schema_cache_put(key, schema)
     return schema
 
 
-def _logical_schema_at(spark: SparkSession, table_path: str):
+def _logical_schema_at(spark: SparkSession, log: _Log):
     """Logical StructType at the LATEST version, via the memoized
     ``logical_schema`` — the validation probe for the metadata-only
     schema ops (rename/drop/retype). On a cache hit this is zero I/O;
@@ -1008,20 +1083,13 @@ def _logical_schema_at(spark: SparkSession, table_path: str):
     table at this path, a DDL in this process can validate against the
     old table's stale cached schema — acceptable under the repo's
     documented single-writer-per-process cache scope."""
-    versions = list_versions(table_path)
-    if not versions:
-        raise ValueError(f"no committed versions at {table_path}")
-    version = versions[-1]
-    files = live_files(table_path, version)
+    version = log.versions[-1]
+    files = log.live(version)
     if not files:
         raise ValueError(
-            f"version {version} at {table_path} has no live files"
+            f"version {version} at {log.path} has no live files"
         )
-    events = _schema_events_upto(table_path, version)
-    first_add = _first_add_versions(table_path, version) if events else {}
-    return logical_schema(
-        spark, table_path, files, version, events, first_add
-    )
+    return logical_schema(spark, log, files, version)
 
 
 def _apply_event_to_schema(schema, extra: dict):
@@ -1333,13 +1401,16 @@ def _write_data_files_ex(
     table_path: str,
     version: int,
     rows_bound: int | str | None = "auto",
+    kind: str = "w",
 ) -> tuple[list[str], int | None]:
     """``_write_data_files`` returning ``(files, n_rows)`` — ``n_rows``
     is known (for free) only when the driver-side fast path ran; callers
-    that need the count otherwise pay their own job."""
+    that need the count otherwise pay their own job. ``kind`` names the
+    staging dir ``v=<version>/<kind>-<uuid>/``: ``w`` for data files,
+    ``dv`` for deletion-vector sidecars (sources/mor.py)."""
     import uuid
 
-    attempt = f"v={version}/w-{uuid.uuid4().hex[:12]}"
+    attempt = f"v={version}/{kind}-{uuid.uuid4().hex[:12]}"
     snap = _join(table_path, attempt)
     bound = scan_rows_bound(df) if rows_bound == "auto" else rows_bound
     if _driver_write_qualifies(snap, bound):
@@ -1393,17 +1464,6 @@ def _footer_stats(abs_path: str) -> dict:
             else:
                 agg[name] = [lo, hi]
     return agg
-
-
-def file_stats(table_path: str, version: int) -> dict:
-    """{relative file -> {column -> [min, max]}} for the committed
-    manifests <= version (files whose commit predates stats support, or
-    whose columns have no footer stats, are simply absent)."""
-    fs = _fs_for(table_path)
-    out: dict[str, dict] = {}
-    for v in [x for x in list_versions(table_path) if x <= version]:
-        out.update(_read_manifest(table_path, v, fs).get("stats", {}))
-    return out
 
 
 def _commit(
@@ -1474,27 +1534,29 @@ def _commit(
         del _SCHEMA_CACHE[k]
 
 
-def _check_commit_order(table_path: str, version: int) -> list[int]:
+def _check_commit_order(table_path: str, version: int) -> _Log:
+    """The commit-time log snapshot, once ``version`` is checked to be
+    the next commit: a non-negative int above every committed
+    version."""
     if version is None or not isinstance(version, int) or version < 0:
         raise ValueError(
             f"commit version must be a non-negative int, got {version!r}"
         )
-    versions = list_versions(table_path)
-    if version in versions:
+    log = _Log(table_path)
+    if version in log.versions:
         raise ValueError(f"version {version} already committed at {table_path}")
-    if versions and version < max(versions):
+    if version < log.latest:
         raise ValueError(
-            f"versions commit in increasing order: {version} < max {max(versions)}"
+            f"versions commit in increasing order: {version} < max {log.latest}"
         )
-    return versions
+    return log
 
 
 def _check_retired_names(
     table_path: str,
-    versions: list[int],
+    events: list[tuple[int, str, str, str | None]],
     df_columns,
     op: str,
-    events: list[tuple[int, str, str, str | None]] | None = None,
 ) -> None:
     """Schema enforcement at the ONE point the rename design needs it: a
     writer carrying a column name that a committed rename RETIRED would
@@ -1509,13 +1571,8 @@ def _check_retired_names(
     writer reusing the name starts a clean new lineage (same rule as
     re-adding a dropped column). Names compare case-insensitively,
     matching Spark's default resolution (a case variant would resurrect
-    just as ambiguously). Pure metadata; tables without schema events
-    pay one directory listing, and callers that already fetched the
-    chain pass it in."""
-    if not versions:
-        return
-    if events is None:
-        events = _schema_events_upto(table_path, versions[-1])
+    just as ambiguously). Pure metadata over the chain at the latest
+    version."""
     if not any(kind == "rename" for _v, kind, _a, _b in events):
         return
     # lower(frm) -> (rv, frm, current successor) maintained in commit
@@ -1559,13 +1616,29 @@ def write_version(
     immutable. ``rows_bound``: see ``_write_data_files`` — callers whose
     frame hides its scan behind a checkpoint may pass a bound they can
     prove (``scan_rows_bound`` on the pre-checkpoint frame)."""
-    versions = _check_commit_order(table_path, version)
-    _check_retired_names(table_path, versions, df.columns, "write_version")
+    log = _check_commit_order(table_path, version)
+    return _write_version(df, log, version, commit_ts, expectations, rows_bound)
+
+
+def _write_version(
+    df: DataFrame,
+    log: _Log,
+    version: int,
+    commit_ts: str | None = None,
+    expectations: dict[str, str] | None = None,
+    rows_bound: int | str | None = "auto",
+) -> str:
+    """``write_version`` over an already-checked commit snapshot."""
+    _check_retired_names(
+        log.path, log.events(log.latest), df.columns, "write_version"
+    )
     check_expectations(df, expectations or {})
-    prev_live = live_files(table_path, versions[-1]) if versions else []
-    add = _write_data_files(df, table_path, version, rows_bound=rows_bound)
-    _commit(table_path, version, add=add, remove=prev_live, commit_ts=commit_ts)
-    return _join(table_path, f"v={version}")
+    add = _write_data_files(df, log.path, version, rows_bound=rows_bound)
+    _commit(
+        log.path, version, add=add, remove=log.live(log.latest),
+        commit_ts=commit_ts,
+    )
+    return _join(log.path, f"v={version}")
 
 
 def append_version(
@@ -1579,59 +1652,44 @@ def append_version(
     """Commit ``df`` as an APPEND: ``version`` sees all previously-live
     files PLUS ``df``'s new files — no prior file is read, rewritten, or
     copied (file-level commit, the Delta/Iceberg primitive)."""
-    versions = _check_commit_order(table_path, version)
-    _check_retired_names(table_path, versions, df.columns, "append_version")
+    log = _check_commit_order(table_path, version)
+    _check_retired_names(
+        table_path, log.events(log.latest), df.columns, "append_version"
+    )
     check_expectations(df, expectations or {})
     add = _write_data_files(df, table_path, version, rows_bound=rows_bound)
     _commit(table_path, version, add=add, remove=[], commit_ts=commit_ts)
     return _join(table_path, f"v={version}")
 
 
-def _check_no_active_dvs(table_path: str, versions: list[int], op: str) -> None:
+def _masking_dvs(log: _Log, version: int, files: list[str]) -> list[int]:
+    """Every deletion-vector commit <= ``version`` when any of them still
+    masks one of ``files`` at ``version`` (a DV masks files whose
+    generation predates it — ``_Log.generations``), else []. A flat
+    re-add of such files (a copy-on-write rewrite, a restore, a clone)
+    would silently resurrect the masked rows."""
+    dvs = [v for v, _f, _k in log.dvs(version)]
+    if not dvs:
+        return []
+    gens = log.generations(version)
+    if any(gens.get(f, version) < dv for f in files for dv in dvs):
+        return dvs
+    return []
+
+
+def _check_no_active_dvs(log: _Log, op: str) -> None:
     """Copy-on-write rewriters read live files RAW: rewriting rows that
     a merge-on-read deletion vector masks (sources/mor.py) would re-add
     them at a version NEWER than the DV, which the Iceberg sequencing
     rule then exempts forever — silent resurrection of deleted rows.
     Refuse while any DV still applies to a live file; ``purge_deletes``
     (which materializes the masked view first) is the sanctioned path."""
-    if not versions:
-        return
-    latest = max(versions)
-    dvs: list[int] = []
-    gens: dict[str, int] = {}
-    for v in versions:  # one manifest pass: DV list + generations
-        m = _read_manifest(table_path, v)
-        for f in m.get("add", []):
-            gens[f] = v
-        if m.get("dv"):
-            dvs.append(v)
-    if not dvs:
-        return
-    live = live_files(table_path, latest)
-    if any(gens.get(f, latest) < dv for f in live for dv in dvs):
+    dvs = _masking_dvs(log, log.latest, log.live(log.latest))
+    if dvs:
         raise ValueError(
-            f"{op} on {table_path} would resurrect rows masked by active "
+            f"{op} on {log.path} would resurrect rows masked by active "
             f"deletion vectors (commits {dvs}); run purge_deletes first"
         )
-
-
-def _file_generations(
-    table_path: str, versions: list[int], upto: int
-) -> dict[str, int]:
-    """Per-file GENERATION at read version ``upto``: the LATEST version
-    <= upto whose manifest (re-)adds the file. A RE-ADD — RESTORE's
-    pure-metadata commit — assigns a NEW generation (the Iceberg
-    data-sequence-number-on-re-add rule), so deletion vectors OLDER
-    than the re-add no longer mask the file's rows: restoring to a
-    pre-delete version truly undoes a merge-on-read DELETE, while reads
-    of the intermediate versions still apply it."""
-    gen: dict[str, int] = {}
-    for v in versions:
-        if v > upto:
-            break
-        for f in _read_manifest(table_path, v).get("add", []):
-            gen[f] = v
-    return gen
 
 
 def delete_where(
@@ -1655,23 +1713,19 @@ def delete_where(
     silently drop newer columns)."""
     from pyspark.sql import functions as F
 
-    versions = _check_commit_order(table_path, version)
-    if not versions:
+    log = _check_commit_order(table_path, version)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
-    _check_no_active_dvs(table_path, versions, "delete_where")
-    prev_live = live_files(table_path, versions[-1])
+    _check_no_active_dvs(log, "delete_where")
+    prev_live = log.live(log.latest)
     paths = {f: _join(table_path, f) for f in prev_live}
-    events = _schema_events_upto(table_path, versions[-1])
-    first_add = _first_add_versions(table_path, versions[-1]) if events else {}
     # one scan: per-file count of matching rows (bounded collect: one row
     # per live file). _logical_read: the predicate binds LOGICAL names,
     # so the delete reaches rows in files written under a pre-rename
     # physical name; input_file_name() survives the per-vintage union.
     counts: dict[str, int] = {}
     for r in (
-        _logical_read(
-            spark, table_path, prev_live, versions[-1], events, first_add
-        )
+        _logical_read(spark, log, prev_live, log.latest)
         .filter(predicate)
         .groupBy(F.input_file_name().alias("f"))
         .agg(F.count("*").alias("n"))
@@ -1685,7 +1739,7 @@ def delete_where(
         # the rewrite reads logical names, so the survivor files are
         # physically re-keyed to the current logical schema
         survivors = _logical_read(
-            spark, table_path, touched, versions[-1], events, first_add
+            spark, log, touched, log.latest
         ).filter(f"NOT ({predicate})")
         add = _write_data_files(survivors, table_path, version)
     _commit(table_path, version, add=add, remove=touched, commit_ts=commit_ts)
@@ -1749,16 +1803,14 @@ def merge_upsert(
     "rows_inserted"}."""
     from pyspark.sql import functions as F
 
-    versions = _check_commit_order(table_path, version)
-    if not versions:
+    log = _check_commit_order(table_path, version)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
-    _check_no_active_dvs(table_path, versions, "merge_upsert")
-    events = _schema_events_upto(table_path, versions[-1])
-    renames = _rename_triples(events)
+    _check_no_active_dvs(log, "merge_upsert")
     _check_retired_names(
-        table_path, versions, updates.columns, "merge_upsert", events
+        table_path, log.events(log.latest), updates.columns, "merge_upsert"
     )
-    prev_live = live_files(table_path, versions[-1])
+    prev_live = log.live(log.latest)
     paths = {f: _join(table_path, f) for f in prev_live}
     # the update set is computed ONCE (3 uses below). Unless its scan
     # inputs already prove it over the small-commit budget, it is
@@ -1803,34 +1855,12 @@ def merge_upsert(
         ).first()
     n_updates = int(bounds["n_updates"])
     updates_unique = int(bounds["n_update_keys"]) == n_updates
-    stats = file_stats(table_path, versions[-1])
-    first_add = (
-        _first_add_versions(table_path, versions[-1]) if events else {}
+    candidates, _ = _prune_by_stats(
+        log, log.latest, prev_live, key, _overlaps(bounds["lo"], bounds["hi"])
     )
 
-    def _phys(f: str) -> str:
-        # footer stats are keyed by each file's PHYSICAL column name
-        return (
-            _physical_name(key, first_add.get(f, versions[-1]), renames)
-            if renames
-            else key
-        )
-
-    candidates = [
-        f
-        for f in prev_live
-        if _phys(f) not in stats.get(f, {})
-        or bounds["lo"] is None
-        or not (
-            stats[f][_phys(f)][0] > bounds["hi"]
-            or stats[f][_phys(f)][1] < bounds["lo"]
-        )
-    ]
-
     probe_df = (
-        _logical_read(
-            spark, table_path, candidates, versions[-1], events, first_add
-        )
+        _logical_read(spark, log, candidates, log.latest)
         if candidates
         else None
     )
@@ -1885,9 +1915,9 @@ def merge_upsert(
     rows_inserted = n_updates - matched_update_rows
 
     if touched:
-        survivors = _logical_read(
-            spark, table_path, touched, versions[-1], events, first_add
-        ).join(keys_df, key, "anti")
+        survivors = _logical_read(spark, log, touched, log.latest).join(
+            keys_df, key, "anti"
+        )
         new_rows = survivors.unionByName(updates, allowMissingColumns=True)
     else:
         new_rows = updates
@@ -1943,16 +1973,16 @@ def compact_files(
     Mutually exclusive with ``cluster_by``."""
     if cluster_by and zorder_by:
         raise ValueError("cluster_by and zorder_by are mutually exclusive")
-    versions = _check_commit_order(table_path, version)
-    if not versions:
+    log = _check_commit_order(table_path, version)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
-    _check_no_active_dvs(table_path, versions, "compact_files")
-    prev_live = live_files(table_path, versions[-1])
+    _check_no_active_dvs(log, "compact_files")
+    prev_live = log.live(log.latest)
     # logical names: a compaction after a rename physically re-keys
     # every file to the current schema (the sanctioned way to retire a
     # long rename chain — and to re-enable bloom indexing on a renamed
     # column)
-    df = _logical_read(spark, table_path, prev_live, versions[-1])
+    df = _logical_read(spark, log, prev_live, log.latest)
     if cluster_by:
         df = df.repartitionByRange(
             max(1, target_files), *cluster_by
@@ -1971,7 +2001,7 @@ def compact_files(
     add = _write_data_files(
         df, table_path, version, rows_bound=None if layout else "auto"
     )
-    extra = _bloom_rebuild_extra(spark, table_path, versions, add, df.schema)
+    extra = _bloom_rebuild_extra(spark, log, add, df.schema)
     _commit(
         table_path, version, add=add, remove=prev_live,
         commit_ts=commit_ts, extra=extra,
@@ -1980,11 +2010,7 @@ def compact_files(
 
 
 def _bloom_rebuild_extra(
-    spark: SparkSession,
-    table_path: str,
-    versions: list[int],
-    add: list[str],
-    schema,
+    spark: SparkSession, log: _Log, add: list[str], schema
 ):
     """Rewrite-time BLOOM INDEX maintenance, shared by every BULK
     rewriter (compact_files, purge_tombstones): a rewrite invalidates
@@ -2001,14 +2027,14 @@ def _bloom_rebuild_extra(
     batch would be a standing tax on unindexed tables; its rewritten
     files stay scan-always until the next compaction/purge."""
     bi_meta = None
-    for v in reversed(versions):  # newest-first: only the LATEST index
-        bi = _read_manifest(table_path, v).get("bloom_index")
+    for v in reversed(log.versions):  # newest-first: only the LATEST index
+        bi = log.manifest(v).get("bloom_index")
         if bi:
             # the entry binds the column name AS OF its commit; a rename
             # since then moved the column — rebuild under the LOGICAL
             # name (bitmaps hash values, so the rename costs nothing)
             col = bi["col"]
-            for rv, frm, to in _renames_upto(table_path, max(versions)):
+            for rv, frm, to in _rename_triples(log.events(log.latest)):
                 if rv > v and col == frm:
                     col = to
             bi_meta = {"col": col, "m_bits": bi["m_bits"], "k": bi["k"]}
@@ -2020,7 +2046,7 @@ def _bloom_rebuild_extra(
     # the rewriter just wrote these files from ``df`` — its schema is the
     # files' schema exactly, so the read-back skips footer inference
     blooms = bloom_words_for_files(
-        spark, table_path, add, bi_meta["col"],
+        spark, log.path, add, bi_meta["col"],
         bi_meta["m_bits"], bi_meta["k"], schema=schema,
     )
     return {"bloom_index": {**bi_meta, "files": blooms}}
@@ -2061,20 +2087,6 @@ def check_expectations(df: DataFrame, expectations: dict[str, str]) -> None:
         )
 
 
-def _vacuum_markers(
-    table_path: str, fs=None, names: list[str] | None = None
-) -> list[dict]:
-    fs = fs or _fs_for(table_path)
-    if names is None:
-        names = fs.list_names(table_path)
-    out = []
-    for n in _meta_versions(names, _VACUUM_PREFIX):
-        out.append(
-            json.loads(fs.read_text(_join(table_path, f"{_VACUUM_PREFIX}{n}.json")))
-        )
-    return out
-
-
 def vacuum(
     table_path: str,
     keep_versions: int = 2,
@@ -2102,8 +2114,8 @@ def vacuum(
         raise ValueError("keep_versions must be >= 1")
     if retain_after is not None:
         retain_after = _canon_ts(retain_after)
-    fs = _fs_for(table_path)
-    versions = list_versions(table_path)
+    log = _Log(table_path)
+    versions = log.versions
     if not versions:
         return {
             "files_deleted": 0,
@@ -2115,16 +2127,15 @@ def vacuum(
         by_time = [
             v
             for v in versions
-            if (_read_manifest(table_path, v, fs).get("ts") or "")
-            >= retain_after
+            if (log.manifest(v).get("ts") or "") >= retain_after
         ]
         retained = sorted(set(retained) | set(by_time))
     keep: set[str] = set()
     for v in retained:
-        keep.update(live_files(table_path, v))
+        keep.update(log.live(v))
     all_files: set[str] = set()
-    for v in versions:
-        all_files.update(_read_manifest(table_path, v, fs).get("add", []))
+    for _v, m in log.manifests(log.latest):
+        all_files.update(m.get("add", []))
     # absolute / fully-qualified refs point into ANOTHER table's root
     # (shallow_clone): this table does not OWN those files, so vacuum
     # must never delete them — only the owning table's vacuum may.
@@ -2141,8 +2152,8 @@ def vacuum(
     # versions committed AFTER this vacuum (whose new files were never
     # deletion candidates) stay readable.
     if doomed:
-        seq = len(_vacuum_markers(table_path, fs))
-        while not fs.put_if_absent_text(
+        seq = len(log._vacuums)
+        while not log.fs.put_if_absent_text(
             _join(table_path, f"{_VACUUM_PREFIX}{seq}.json"),
             json.dumps(
                 {
@@ -2154,8 +2165,8 @@ def vacuum(
         ):
             seq += 1
     for f in doomed:
-        fs.delete(_join(table_path, f))
-    orphans = _sweep_orphan_data_files(table_path, versions, fs)
+        log.fs.delete(_join(table_path, f))
+    orphans = _sweep_orphan_data_files(log)
     return {
         "files_deleted": len(doomed),
         "versions_retained": retained,
@@ -2163,7 +2174,7 @@ def vacuum(
     }
 
 
-def _sweep_orphan_data_files(table_path: str, versions: list[int], fs) -> int:
+def _sweep_orphan_data_files(log: _Log) -> int:
     """Delete data files under ``v=<n>/`` subtrees that no manifest
     references, for versions <= the max committed version. Such files are
     torn attempts or zombie duplicate writers that lost the put-if-absent
@@ -2171,18 +2182,14 @@ def _sweep_orphan_data_files(table_path: str, versions: list[int], fs) -> int:
     number <= max(versions) can never be committed again and the files are
     permanently unreachable. In-flight writers always target a version
     > max(versions) and are never touched."""
-    if not versions:
-        return 0
     referenced: set[str] = set()
-    for v in versions:
-        m = _read_manifest(table_path, v, fs)
+    for _v, m in log.manifests(log.latest):
         referenced.update(m.get("add", []))
         # deletion-vector sidecars (sources/mor.py) are manifest-
         # referenced metadata, not orphans
         referenced.update(m.get("dv") or [])
-    hi = max(versions)
     deleted = 0
-    for rel in fs.list_files_recursive(table_path):
+    for rel in log.fs.list_files_recursive(log.path):
         top = rel.split("/", 1)[0]
         if not top.startswith("v="):
             continue
@@ -2190,50 +2197,10 @@ def _sweep_orphan_data_files(table_path: str, versions: list[int], fs) -> int:
             n = int(top[2:])
         except ValueError:
             continue
-        if n <= hi and rel not in referenced:
-            if fs.delete(_join(table_path, rel)):
+        if n <= log.latest and rel not in referenced:
+            if log.fs.delete(_join(log.path, rel)):
                 deleted += 1
     return deleted
-
-
-def _check_not_vacuumed(
-    table_path: str,
-    version: int,
-    files: list[str],
-    versions: list[int],
-    fs=None,
-    names: list[str] | None = None,
-) -> None:
-    """Vacuum guard: a version is unreadable iff its live set intersects
-    the files some vacuum run actually DELETED (recorded in the marker) —
-    versions committed after a vacuum, whose new files were never deletion
-    candidates, pass. Pure metadata (no per-file existence probe).
-    Markers written before the deleted-list field fall back to the kept-
-    set coverage rule, restricted to versions the marker could have
-    affected (nothing newer than its max retained version existed at
-    vacuum time)."""
-    for marker in _vacuum_markers(table_path, fs, names):
-        if version in marker["retained"]:
-            continue
-        deleted = marker.get("deleted")
-        if deleted is not None:
-            if set(files) & set(deleted):
-                raise ValueError(
-                    f"version {version} at {table_path} was vacuumed "
-                    f"(retained: {marker['retained']})"
-                )
-            continue
-        if version > max(marker["retained"]):
-            continue  # committed after this (legacy) vacuum ran
-        kept: set[str] = set()
-        for rv in marker["retained"]:
-            if rv in versions:
-                kept.update(live_files(table_path, rv))
-        if not set(files) <= kept:
-            raise ValueError(
-                f"version {version} at {table_path} was vacuumed "
-                f"(retained: {marker['retained']})"
-            )
 
 
 def read_version(
@@ -2247,67 +2214,45 @@ def read_version(
     metadata, no per-file existence probe) instead of a parquet
     file-not-found deep in the scan.
 
-    Metadata cost: ONE directory listing serves every question this read
-    asks (committed versions, checkpoint discovery, vacuum markers,
-    schema-event hints, first-add resume) — the zero-extra-listing
-    contract pinned by tests/test_versioned.py's FS op-counter. On an
-    event-free table the hint fast path adds ZERO reads on top of the
-    manifest replay."""
-    fs = _fs_for(table_path)
-    names = fs.list_names(table_path)
-    versions = _meta_versions(names, _MANIFEST_PREFIX)
-    if not versions:
-        raise ValueError(f"no committed versions at {table_path}")
-    if version is None:
-        version = max(versions)
-    if version not in versions:
-        raise ValueError(f"version {version} not in {versions} at {table_path}")
-    files = live_files(table_path, version, fs, names)
-    if not files:
-        raise ValueError(f"version {version} at {table_path} has no live files")
-    _check_not_vacuumed(table_path, version, files, versions, fs, names)
-    # schema: the footer schema the files share (no inference job), or
-    # mergeSchema when they differ — ADDITIVE schema evolution: an
-    # append_version that introduced new columns unions by name with
-    # older files (absent columns read as NULL), the Delta/Iceberg
-    # add-column semantics.
-    # RENAME / DROP / RETYPE are metadata-only commits resolved per-file
-    # by the schema-event chain (_logical_read / rename_column /
-    # drop_column / retype_column).
-    events = _schema_events_upto(table_path, version, fs, names)
-    first_add = (
-        _first_add_versions(table_path, version, fs, names) if events else {}
-    )
-    return _logical_read(spark, table_path, files, version, events, first_add)
+    Schema: the footer schema the files share (no inference job), or
+    mergeSchema when they differ — ADDITIVE schema evolution: an
+    append_version that introduced new columns unions by name with
+    older files (absent columns read as NULL), the Delta/Iceberg
+    add-column semantics. RENAME / DROP / RETYPE are metadata-only
+    commits resolved per file by the schema-event chain
+    (``_logical_read``).
+
+    Metadata cost: one ``_Log`` snapshot — ONE directory listing and at
+    most one read per manifest, checkpoint and vacuum marker answer
+    every question this read asks (pinned by the FS op-counter tests in
+    tests/test_schema_events.py). On an event-free table the hint fast
+    path adds ZERO reads on top of the manifest replay."""
+    log = _Log(table_path)
+    version, files = log.resolve(version)
+    return _logical_read(spark, log, files, version)
+
+
+def _contains_any(values):
+    """``_prune_by_stats`` keep test: the file's range contains at least
+    one of ``values``."""
+    vals = list(values)
+    return lambda lo, hi: any(lo <= v <= hi for v in vals)
+
+
 def prune_files_by_stats(
     table_path: str, version: int, column: str, values
 ) -> tuple[list[str], list[str]]:
     """Split ``version``'s live files into (candidates, skipped) by the
     manifest-recorded footer [min,max] range of ``column`` vs a value set
-    — the generic data-skipping read primitive (same rule merge_upsert
-    uses for its probe): a file is SKIPPED only when its recorded range
-    provably contains none of ``values``; files without stats stay
-    candidates. ``column`` is the LOGICAL name at ``version`` — footer
-    stats are recorded under each file's physical names, so the probe
-    maps through the rename chain per file (pre-rename files keep
-    pruning under the new name). Pure metadata — no file is opened."""
-    vals = sorted(values)
-    stats = file_stats(table_path, version)
-    renames = _renames_upto(table_path, version)
-    first_add = _first_add_versions(table_path, version) if renames else {}
-    candidates, skipped = [], []
-    for f in live_files(table_path, version):
-        phys = (
-            _physical_name(column, first_add.get(f, version), renames)
-            if renames
-            else column
-        )
-        rng = stats.get(f, {}).get(phys)
-        if rng is None or any(rng[0] <= v <= rng[1] for v in vals):
-            candidates.append(f)
-        else:
-            skipped.append(f)
-    return candidates, skipped
+    — the generic data-skipping read primitive (``_prune_by_stats``): a
+    file is SKIPPED only when its recorded range provably contains none
+    of ``values``; files without stats stay candidates. ``column`` is
+    the LOGICAL name at ``version``. Pure metadata — no file is
+    opened."""
+    log = _Log(table_path)
+    return _prune_by_stats(
+        log, version, log.live(version), column, _contains_any(values)
+    )
 
 
 def read_version_pruned(
@@ -2322,25 +2267,23 @@ def read_version_pruned(
     read it as NULL."""
     from pyspark.sql import functions as F
 
-    live = live_files(table_path, version)
-    _check_not_vacuumed(table_path, version, live, list_versions(table_path))
-    candidates, _ = prune_files_by_stats(table_path, version, column, values)
+    log = _Log(table_path)
+    version, live = log.resolve(version)
+    candidates, _ = _prune_by_stats(
+        log, version, live, column, _contains_any(values)
+    )
     if not candidates:
         # provably empty: keep the schema without scanning data rows
-        return (
-            read_version(spark, table_path, version)
-            .filter(F.lit(False))
-        )
-    events = _schema_events_upto(table_path, version)
-    df = _logical_read(spark, table_path, candidates, version, events)
+        return _logical_read(spark, log, live, version).filter(F.lit(False))
+    df = _logical_read(spark, log, candidates, version)
     # a strict subset of live files that all share one footer schema and
     # no schema event reads exactly read_version's schema; otherwise the
     # kept files may predate a column
     if len(candidates) < len(live) and (
-        events
+        log.events(version)
         or _shared_footer_schema([_join(table_path, f) for f in live]) is None
     ):
-        full = logical_schema(spark, table_path, live, version, events)
+        full = logical_schema(spark, log, live, version)
         if df.schema != full:
             have = set(df.columns)
             df = df.select(
@@ -2378,41 +2321,25 @@ def read_changes(
     bounded by a pushed key-range predicate from the DV's own bounds
     (footer min/max skipping), so the cost tracks the delete's
     selectivity, not the table."""
-    versions = list_versions(table_path)
+    from dodo_spark.sources.mor import apply_dvs_to_files
+
+    log = _Log(table_path)
+    versions = log.versions
     if version not in versions:
         raise ValueError(f"version {version} not in {versions} at {table_path}")
-    m = _read_manifest(table_path, version)
+    m = log.manifest(version)
     # guard the files this read will actually open: the commit's own
     # add+remove (+DV sidecar) lists. A RETAINED version's remove-side
     # files belonged to its predecessor and may still have been swept,
-    # so check the union against each marker's deleted list directly
-    # rather than via the live-set rule.
-    wanted = (
+    # so the union is checked against each marker, not the live set.
+    log.check_not_vacuumed(
+        version,
         set(m.get("add") or [])
         | set(m.get("remove") or [])
-        | set(m.get("dv") or [])
+        | set(m.get("dv") or []),
+        f"changes for version {version} at {table_path} reference "
+        f"vacuumed files",
     )
-    for marker in _vacuum_markers(table_path):
-        deleted = marker.get("deleted")
-        if deleted is not None:
-            swept = bool(wanted & set(deleted))
-        elif version > max(marker["retained"]):
-            swept = False  # committed after this (legacy) vacuum ran
-        else:
-            # legacy marker without a deleted list: the kept-set coverage
-            # rule over the files THIS read opens — a retained version's
-            # remove-side files belonged to its predecessor, so retention
-            # alone does not make them safe
-            kept: set[str] = set()
-            for rv in marker["retained"]:
-                if rv in versions:
-                    kept.update(live_files(table_path, rv))
-            swept = not wanted <= kept
-        if swept:
-            raise ValueError(
-                f"changes for version {version} at {table_path} reference "
-                f"vacuumed files (retained: {marker['retained']})"
-            )
 
     def _rd(files: list[str]) -> DataFrame | None:
         if not files:
@@ -2422,20 +2349,19 @@ def read_changes(
         # remove-side file written pre-rename still surfaces the commit's
         # names). A rename commit itself adds/removes nothing -> (None,
         # None), semantically a no-op for row-level consumers.
-        return _logical_read(spark, table_path, files, version)
+        return _logical_read(spark, log, files, version)
 
+    idx = versions.index(version)
     if m.get("dv") and not (m.get("add") or m.get("remove")):
         from pyspark.sql import functions as F
-
-        from dodo_spark.sources.mor import read_with_deletes
 
         dv_key = m["dv_key"]
         keys = _rd(m["dv"]).distinct()
         bounds = keys.agg(
             F.min(dv_key).alias("lo"), F.max(dv_key).alias("hi")
         ).first()
-        idx = versions.index(version)
-        prior = read_with_deletes(spark, table_path, versions[idx - 1])
+        prior_v, prior_files = log.resolve(versions[idx - 1])
+        prior = apply_dvs_to_files(spark, log, prior_files, prior_v)
         if bounds["lo"] is not None:
             # scan-side range predicate: parquet footer min/max skips
             # files/row-groups outside the DV's key bounds
@@ -2447,22 +2373,14 @@ def read_changes(
 
     remove_files = m.get("remove") or []
     removed_df = _rd(remove_files)
-    if remove_files:
-        # the remove side must be netted at its PRIOR-version
-        # visibility: if DVs were active on those files (a purge /
-        # rewrite after a MoR delete), a raw read would re-subtract the
-        # already-removed masked rows — fold-the-feed then undercounts
-        idx = versions.index(version)
-        if idx > 0:
-            from dodo_spark.sources.mor import _dv_entries, apply_dvs_to_files
-
-            prior_v = versions[idx - 1]
-            if any(
-                v <= prior_v for (v, _f, _k) in _dv_entries(table_path, versions)
-            ):
-                removed_df = apply_dvs_to_files(
-                    spark, table_path, remove_files, prior_v, versions
-                )
+    # the remove side must be netted at its PRIOR-version visibility: if
+    # DVs were active on those files (a purge / rewrite after a MoR
+    # delete), a raw read would re-subtract the already-removed masked
+    # rows — fold-the-feed then undercounts
+    if remove_files and idx > 0 and log.dvs(versions[idx - 1]):
+        removed_df = apply_dvs_to_files(
+            spark, log, remove_files, versions[idx - 1]
+        )
     return _rd(m.get("add") or []), removed_df
 
 
@@ -2491,10 +2409,9 @@ def version_history(table_path: str) -> list[dict]:
     """[{version, ts}] for every committed version, ascending (the
     DESCRIBE HISTORY primitive). Manifests written before commit-ts
     support surface ts=None."""
-    fs = _fs_for(table_path)
+    log = _Log(table_path)
     return [
-        {"version": v, "ts": _read_manifest(table_path, v, fs).get("ts")}
-        for v in list_versions(table_path)
+        {"version": v, "ts": m.get("ts")} for v, m in log.manifests(log.latest)
     ]
 
 
@@ -2512,15 +2429,23 @@ def resolve_as_of(table_path: str, time_str: str) -> int:
     at a single writer; with skewed writer clocks the resolution is still
     deterministic (latest qualifying version wins). Raises if the table
     has no version that old."""
+    return _resolve_as_of(_Log(table_path), time_str)
+
+
+def _resolve_as_of(log: _Log, time_str: str) -> int:
     probe = _canon_ts(time_str)
-    hist = [h for h in version_history(table_path) if h["ts"] is not None]
+    hist = [
+        (v, m["ts"])
+        for v, m in log.manifests(log.latest)
+        if m.get("ts") is not None
+    ]
     if not hist:
-        raise ValueError(f"no timestamped versions at {table_path}")
-    qualifying = [h["version"] for h in hist if h["ts"] <= probe]
+        raise ValueError(f"no timestamped versions at {log.path}")
+    qualifying = [v for v, ts in hist if ts <= probe]
     if not qualifying:
         raise ValueError(
-            f"no version at {table_path} committed at or before "
-            f"{time_str!r} (earliest: {hist[0]['ts']!r})"
+            f"no version at {log.path} committed at or before "
+            f"{time_str!r} (earliest: {hist[0][1]!r})"
         )
     return max(qualifying)
 
@@ -2529,8 +2454,11 @@ def read_as_of(spark: SparkSession, table_path: str, time_str: str) -> DataFrame
     """``FOR TIME AS OF '<timestamp>'`` (reference tableSnapshot, the
     second alternative of ``DorisParser.g4:1754-1757``): resolve the
     commit-time-qualified version, then read it exactly like
-    ``read_version`` (same live-file-list scan, same vacuum guard)."""
-    return read_version(spark, table_path, resolve_as_of(table_path, time_str))
+    ``read_version`` (same live-file-list scan, same vacuum guard), off
+    one log snapshot."""
+    log = _Log(table_path)
+    version, files = log.resolve(_resolve_as_of(log, time_str))
+    return _logical_read(spark, log, files, version)
 
 
 # --------------------------------------------------------------------------
@@ -3063,14 +2991,14 @@ def rename_column(
     the data files themselves.
 
     Returns {"version", "renamed", "data_files_written": 0}."""
-    versions = _check_commit_order(table_path, version)
-    if not versions:
+    log = _check_commit_order(table_path, version)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
     if not old or not new:
         raise ValueError("rename_column: old and new must be non-empty")
     if old == new:
         raise ValueError(f"rename_column: old == new ({old!r})")
-    schema = _logical_schema_at(spark, table_path)
+    schema = _logical_schema_at(spark, log)
     cols = list(schema.names)
     if old not in cols:
         raise ValueError(
@@ -3085,7 +3013,7 @@ def rename_column(
             f"rename_column: column {new!r} already exists at {table_path} "
             f"(case-insensitive; columns: {cols})"
         )
-    _check_no_active_dvs(table_path, versions, "rename_column")
+    _check_no_active_dvs(log, "rename_column")
     _commit_schema_event(
         table_path,
         version,
@@ -3158,12 +3086,12 @@ def drop_column(
     and for the table's last remaining column.
 
     Returns {"version", "dropped", "data_files_written": 0}."""
-    versions = _check_commit_order(table_path, version)
-    if not versions:
+    log = _check_commit_order(table_path, version)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
     if not column:
         raise ValueError("drop_column: column must be non-empty")
-    schema = _logical_schema_at(spark, table_path)
+    schema = _logical_schema_at(spark, log)
     cols = list(schema.names)
     if column not in cols:
         raise ValueError(
@@ -3174,7 +3102,7 @@ def drop_column(
         raise ValueError(
             f"drop_column: {column!r} is the last column at {table_path}"
         )
-    _check_no_active_dvs(table_path, versions, "drop_column")
+    _check_no_active_dvs(log, "drop_column")
     _commit_schema_event(
         table_path,
         version,
@@ -3244,10 +3172,10 @@ def retype_column(
 
     Returns {"version", "retyped": {"column", "from", "to"},
     "data_files_written": 0}."""
-    versions = _check_commit_order(table_path, version)
-    if not versions:
+    log = _check_commit_order(table_path, version)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
-    schema = _logical_schema_at(spark, table_path)
+    schema = _logical_schema_at(spark, log)
     if column not in schema.names:
         raise ValueError(
             f"retype_column: no column {column!r} at {table_path} "
@@ -3268,7 +3196,7 @@ def retype_column(
             f"only. Rewrite instead: read_version + cast + write_version "
             f"(or compact_files after fixing the writers)."
         )
-    _check_no_active_dvs(table_path, versions, "retype_column")
+    _check_no_active_dvs(log, "retype_column")
     _commit_schema_event(
         table_path,
         version,
@@ -3289,13 +3217,11 @@ def schema_history(
     """The committed schema-event chain at ``version`` (default latest):
     ``[{"version", "kind", ...}]`` ascending — the DESCRIBE-style
     inspection surface over renames, drops and retypes together."""
-    versions = list_versions(table_path)
-    if not versions:
-        return []
+    log = _Log(table_path)
     if version is None:
-        version = max(versions)
+        version = log.latest
     out = []
-    for v, kind, a, b in _schema_events_upto(table_path, version):
+    for v, kind, a, b in log.events(version):
         if kind == "rename":
             out.append({"version": v, "kind": kind, "from": a, "to": b})
         elif kind == "drop":
@@ -3311,14 +3237,12 @@ def rename_history(
     """The committed rename chain at ``version`` (default latest):
     ``[{"version", "from", "to"}]`` ascending — the DESCRIBE-style
     inspection surface for the column mapping."""
-    versions = list_versions(table_path)
-    if not versions:
-        return []
+    log = _Log(table_path)
     if version is None:
-        version = max(versions)
+        version = log.latest
     return [
         {"version": rv, "from": frm, "to": to}
-        for rv, frm, to in _renames_upto(table_path, version)
+        for rv, frm, to in _rename_triples(log.events(version))
     ]
 
 
@@ -3339,7 +3263,7 @@ def restore_version(
     table size.
 
     Merge-on-read interaction: the re-add bumps every restored file's
-    GENERATION past older deletion vectors (see ``_file_generations``),
+    GENERATION past older deletion vectors (see ``_Log.generations``),
     which is exactly right when ``restore_to`` PRECEDES the MoR delete
     (the delete is undone). But when the restored-to state itself has
     an ACTIVE DV, a flat re-add would silently RESURRECT the masked
@@ -3348,36 +3272,26 @@ def restore_version(
     materialized view instead: ``read_with_deletes`` at ``restore_to``
     + ``write_version`` (a data-copying restore), or ``purge_deletes``
     going forward so later restore points are DV-free."""
-    versions = _check_commit_order(table_path, as_version)
-    if not versions:
+    log = _check_commit_order(table_path, as_version)
+    if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
-    if restore_to not in versions:
+    if restore_to not in log.versions:
         raise ValueError(
-            f"version {restore_to} not in {versions} at {table_path}"
+            f"version {restore_to} not in {log.versions} at {table_path}"
         )
-    target_files = live_files(table_path, restore_to)
-    _check_not_vacuumed(table_path, restore_to, target_files, versions)
-    dvs = [
-        v
-        for v in versions
-        if v <= restore_to and _read_manifest(table_path, v).get("dv")
-    ]
+    target_files = log.live(restore_to)
+    log.check_not_vacuumed(restore_to, target_files)
+    dvs = _masking_dvs(log, restore_to, target_files)
     if dvs:
-        gens = _file_generations(table_path, versions, restore_to)
-        if any(
-            gens.get(f, restore_to) < dv for f in target_files for dv in dvs
-        ):
-            raise ValueError(
-                f"version {restore_to} at {table_path} has active deletion "
-                f"vectors (commits {dvs}); a pure-metadata restore would "
-                f"resurrect the masked rows — restore the materialized "
-                f"view (read_with_deletes + write_version) or "
-                f"purge_deletes first"
-            )
-    prev_live = live_files(table_path, versions[-1])
-    _check_restore_rename_collisions(
-        table_path, versions, target_files, restore_to
-    )
+        raise ValueError(
+            f"version {restore_to} at {table_path} has active deletion "
+            f"vectors (commits {dvs}); a pure-metadata restore would "
+            f"resurrect the masked rows — restore the materialized "
+            f"view (read_with_deletes + write_version) or "
+            f"purge_deletes first"
+        )
+    prev_live = log.live(log.latest)
+    _check_restore_rename_collisions(log, target_files, restore_to)
     # add back exactly the restored set; remove what is live now. Files in
     # BOTH sets would be removed-then-re-added by the replay algebra
     # (remove applies before add within one manifest), so they stay live.
@@ -3397,10 +3311,7 @@ def restore_version(
 
 
 def _check_restore_rename_collisions(
-    table_path: str,
-    versions: list[int],
-    target_files: list[str],
-    restore_to: int,
+    log: _Log, target_files: list[str], restore_to: int
 ) -> None:
     """Name-based column mapping's one restore hazard (round-9 advisor
     finding): ``rename_column`` validates its target against the LIVE
@@ -3415,37 +3326,27 @@ def _check_restore_rename_collisions(
     the rename target. Typical restores pay nothing: files live at the
     rename were validated by it, so the risky set is empty and no
     footer is touched."""
-    events = _schema_events_upto(table_path, versions[-1])
-    renames = _rename_triples(events)
+    renames = _rename_triples(log.events(log.latest))
     if not renames:
         return
-    first_add = _first_add_versions(table_path, versions[-1])
-    fs = _fs_for(table_path)
-    live_cache: dict[int, set[str]] = {}
-    stats_cache: dict[int, dict] = {}
+    first_add = log.first_add(log.latest)
     for rv, _frm, to in renames:
         if rv <= 0:
             continue
-        if rv not in live_cache:
-            # live set at the rename's PREDECESSOR commit — the state
-            # whose columns the rename's validation actually saw
-            prev = max((v for v in versions if v < rv), default=None)
-            live_cache[rv] = (
-                set(live_files(table_path, prev)) if prev is not None else set()
-            )
+        # live set at the rename's PREDECESSOR commit — the state whose
+        # columns the rename's validation actually saw
+        prev = max((v for v in log.versions if v < rv), default=None)
+        live_then = set(log.live(prev)) if prev is not None else set()
         risky = [
             f
             for f in target_files
-            if first_add.get(f, restore_to) < rv and f not in live_cache[rv]
+            if first_add.get(f, restore_to) < rv and f not in live_then
         ]
         for f in risky:
             av = first_add.get(f, restore_to)
-            if av not in stats_cache:
-                stats_cache[av] = _read_manifest(table_path, av, fs).get(
-                    "stats", {}
-                )
-            phys = {c.lower() for c in stats_cache[av].get(f, {})}
-            lp = _local_path(_join(table_path, f))
+            stats = log.manifest(av).get("stats", {})
+            phys = {c.lower() for c in stats.get(f, {})}
+            lp = _local_path(_join(log.path, f))
             if lp is not None:
                 try:
                     import pyarrow.parquet as pq
@@ -3694,20 +3595,20 @@ def _clone_preflight(
     refuse a rename chain (the clone's flat v0 has no rename manifests,
     so the physically mixed column names would surface raw; compact
     first — it re-keys every file to the logical schema), and require
-    an empty target. Returns (versions, version, files)."""
-    versions = list_versions(source_path)
-    if not versions:
+    an empty target. Returns (source log, version, files)."""
+    log = _Log(source_path)
+    if not log.versions:
         raise ValueError(f"no committed versions at {source_path}")
     if version is None:
-        version = max(versions)
-    files = live_files(source_path, version)
-    events = _schema_events_upto(source_path, version)
+        version = log.latest
+    files = log.live(version)
+    events = log.events(version)
     if events:
         # refuse only when some live file actually NEEDS the chain (was
         # first-added before a rename/drop/retype); after a compaction
         # every live file is physically keyed to the logical schema and
         # the flat clone is faithful
-        first_add = _first_add_versions(source_path, version)
+        first_add = log.first_add(version)
         if any(
             ev > first_add.get(f, version)
             for f in files
@@ -3720,25 +3621,16 @@ def _clone_preflight(
                 f"raw — run compact_files first (re-keys every file to "
                 f"the logical schema), then clone"
             )
-    _check_not_vacuumed(source_path, version, files, versions)
-    dv_versions = [
-        v
-        for v in versions
-        if v <= version and _read_manifest(source_path, v).get("dv")
-    ]
-    if dv_versions:
-        gens = _file_generations(source_path, versions, version)
-        if any(
-            gens.get(f, version) < dv for f in files for dv in dv_versions
-        ):
-            raise ValueError(
-                f"version {version} at {source_path} has active deletion "
-                f"vectors (commits {dv_versions}); run purge_deletes "
-                f"first, then clone"
-            )
+    log.check_not_vacuumed(version, files)
+    dvs = _masking_dvs(log, version, files)
+    if dvs:
+        raise ValueError(
+            f"version {version} at {source_path} has active deletion "
+            f"vectors (commits {dvs}); run purge_deletes first, then clone"
+        )
     if list_versions(target_path):
         raise ValueError(f"target {target_path} already has commits")
-    return versions, version, files
+    return log, version, files
 
 
 def shallow_clone(
@@ -3755,9 +3647,7 @@ def shallow_clone(
     before vacuuming a cloned-from table. Returns {"files_referenced",
     "version"}. Absolute refs work because ``_join`` resolves an
     absolute member path as-is on every FS shim."""
-    versions, version, files = _clone_preflight(
-        source_path, target_path, version
-    )
+    _log, version, files = _clone_preflight(source_path, target_path, version)
     abs_refs = [_join(source_path, f) for f in files]
     _commit(target_path, 0, add=abs_refs, remove=[])
     return {"files_referenced": len(abs_refs), "version": 0}
@@ -3790,15 +3680,11 @@ def deep_clone(
             f"({target_path}). Copy across stores with a distcp-style job, "
             f"then add_external_files / convert."
         )
-    versions, version, files = _clone_preflight(
-        source_path, target_path, version
-    )
+    log, version, files = _clone_preflight(source_path, target_path, version)
     bloom_sig = None  # (col, m_bits, k): entries are only comparable
     bloom_entries: dict[str, str] = {}
-    for v in versions:
-        if v > version:
-            break
-        bi = _read_manifest(source_path, v).get("bloom_index")
+    for _v, m in log.manifests(version):
+        bi = m.get("bloom_index")
         if bi:
             sig = (bi["col"], bi["m_bits"], bi["k"])
             if sig != bloom_sig:

@@ -40,3 +40,48 @@ def s3_shim():
 
     with s3_override() as client:
         yield client
+
+
+class _CountingFS:
+    """Pass-through FS shim proxy recording per-op call counts, in total
+    (``counts[op]``) and per path (``calls[(op, path)]``)."""
+
+    def __init__(self, inner):
+        from collections import Counter
+
+        self._inner = inner
+        self.counts = Counter()
+        self.calls = Counter()
+
+    def reset(self):
+        self.counts.clear()
+        self.calls.clear()
+
+    def __getattr__(self, name):
+        fn = getattr(self._inner, name)
+        if not callable(fn):
+            return fn
+
+        def wrapped(*a, **kw):
+            self.counts[name] += 1
+            if a:
+                self.calls[(name, a[0])] += 1
+            return fn(*a, **kw)
+
+        return wrapped
+
+
+@pytest.fixture()
+def counting_fs():
+    """Route every local table path's metadata IO through a
+    ``_CountingFS`` over the POSIX shim."""
+    from dodo_spark.sources import versioned as V
+    from dodo_spark.sources.versioned import _LocalFS
+
+    fs = _CountingFS(_LocalFS())
+    prev = V._FS_OVERRIDE
+    V._FS_OVERRIDE = lambda p: fs if "://" not in p else None
+    try:
+        yield fs
+    finally:
+        V._FS_OVERRIDE = prev

@@ -327,8 +327,8 @@ def test_cli_clean(tmp_path):
 
 
 def test_cli_dump_single_line_matches_reassembly(spark, tmp_path):
-    """--single-line must produce the identical statement set when every
-    record IS one line (it skips the reassembly passes, nothing else)."""
+    """A log whose every record IS one line dumps through the one
+    reassembly path (there is no separate single-line mode)."""
     from dodo_spark.cli import main
 
     # the fixture log contains multi-line records; build a single-line-only
@@ -341,12 +341,9 @@ def test_cli_dump_single_line_matches_reassembly(spark, tmp_path):
     single = tmp_path / "single.log"
     single.write_text("\n".join(lines) + "\n")
 
-    out_a, out_b = tmp_path / "a", tmp_path / "b"
+    out_a = tmp_path / "a"
     assert main(["dump", "--audit-log", str(single), "--output", str(out_a)]) == 0
-    assert main(["dump", "--audit-log", str(single), "--output", str(out_b), "--single-line"]) == 0
-    a = sorted((out_a / "q0.sql").read_text().splitlines())
-    b = sorted((out_b / "q0.sql").read_text().splitlines())
-    assert a == b and len(a) > 0
+    assert len((out_a / "q0.sql").read_text().splitlines()) > 0
 
 
 def test_cli_snapshot_commit_list_read(spark, sf_dir, tmp_path, capsys):

@@ -424,44 +424,6 @@ def test_checkpoint_first_add_survives_restore_across_drop(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # metadata-cost contract: the hint fast path adds ZERO FS ops
 # ---------------------------------------------------------------------------
-class _CountingFS:
-    """Pass-through FS shim proxy recording per-op call counts."""
-
-    def __init__(self, inner):
-        from collections import Counter
-
-        self._inner = inner
-        self.counts = Counter()
-
-    def reset(self):
-        self.counts.clear()
-
-    def __getattr__(self, name):
-        fn = getattr(self._inner, name)
-        if not callable(fn):
-            return fn
-
-        def wrapped(*a, **kw):
-            self.counts[name] += 1
-            return fn(*a, **kw)
-
-        return wrapped
-
-
-@pytest.fixture()
-def counting_fs():
-    from dodo_spark.sources import versioned as V
-    from dodo_spark.sources.versioned import _LocalFS
-
-    fs = _CountingFS(_LocalFS())
-    prev = V._FS_OVERRIDE
-    V._FS_OVERRIDE = lambda p: fs if "://" not in p else None
-    try:
-        yield fs
-    finally:
-        V._FS_OVERRIDE = prev
-
-
 def test_read_version_event_free_zero_extra_ops(spark, tmp_path, counting_fs):
     """Pins the hint contract's headline claim (versioned.py:91): on an
     EVENT-FREE table, read_version pays exactly ONE directory listing
@@ -487,10 +449,9 @@ def test_read_version_event_free_zero_extra_ops(spark, tmp_path, counting_fs):
 
 
 def test_read_version_event_table_ops_bounded(spark, tmp_path, counting_fs):
-    """On a table WITH schema events the extra metadata cost is bounded
-    by the hints plus the first-add scan over commits since the latest
-    checkpoint — never extra directory listings, never O(commits)
-    beyond the replay itself."""
+    """On a table WITH schema events the metadata cost is still one
+    listing and one read per manifest: the hinted manifest and the
+    first-add scan reuse the reads the replay already made."""
     from dodo_spark.sources.versioned import checkpoint_manifest
 
     tbl = str(tmp_path / "t")
@@ -503,21 +464,20 @@ def test_read_version_event_table_ops_bounded(spark, tmp_path, counting_fs):
     )
     counting_fs.reset()
     read_version(spark, tbl)
-    # one listing; replay reads 3 manifests; the hint re-reads the one
-    # hinted manifest; first-add re-scans the 3 manifests (no checkpoint)
+    # one listing; the replay reads the 3 manifests, and the hinted
+    # manifest and first-add scan (no checkpoint) read none again
     assert counting_fs.counts["list_names"] == 1
-    assert counting_fs.counts["read_text"] == 3 + 1 + 3
+    assert counting_fs.counts["read_text"] == 3
 
     # a checkpoint collapses the replay, the first-add scan AND (since
-    # r11, via the payload's baked-in event chain) the hint re-reads
+    # r11, via the payload's baked-in event chain) the hinted manifests
     checkpoint_manifest(tbl)
     counting_fs.reset()
     read_version(spark, tbl)
     assert counting_fs.counts["list_names"] == 1
-    # checkpoint payload read three times (live replay + first-add
-    # resume + event-chain resume), ZERO hinted manifests: O(hints +
-    # commits since checkpoint) with both terms zero
-    assert counting_fs.counts["read_text"] == 3
+    # the checkpoint payload, read once, serves the live replay, the
+    # first-add resume and the event-chain resume; ZERO manifests
+    assert counting_fs.counts["read_text"] == 1
 
 
 def test_restore_refuses_rename_target_collision(spark, tmp_path):
@@ -930,13 +890,13 @@ def test_hundred_event_chain_bounded_and_checkpoint_collapses(
     spark, tmp_path, counting_fs
 ):
     """Round-11 ask #4: counter-asserted metadata cost at chain length
-    100. Pre-checkpoint a read pays exactly O(hints + commits) — the
-    replay (N+1 manifests), the hinted-manifest event reads (N), and
-    the first-add scan (N+1): 3N+2 text reads off ONE listing. A
-    checkpoint then collapses ALL THREE terms (its payload bakes in the
-    live set, the first-add map and — since r11 — the resolved event
-    chain), so the post-checkpoint read cost is a CONSTANT independent
-    of chain length: identical FS op counts at N=10 and N=100."""
+    100. Pre-checkpoint a read pays exactly one read per manifest — the
+    replay, the hinted-manifest event reads and the first-add scan share
+    them: N+1 text reads off ONE listing. A checkpoint then collapses
+    ALL THREE (its payload bakes in the live set, the first-add map and
+    — since r11 — the resolved event chain), so the post-checkpoint
+    read cost is a CONSTANT independent of chain length: identical FS
+    op counts at N=10 and N=100."""
     from dodo_spark.sources.versioned import checkpoint_manifest
 
     costs: dict[int, dict] = {}
@@ -947,7 +907,7 @@ def test_hundred_event_chain_bounded_and_checkpoint_collapses(
         counting_fs.reset()
         df = read_version(spark, tbl)
         assert counting_fs.counts["list_names"] == 1
-        assert counting_fs.counts["read_text"] == 3 * n_events + 2
+        assert counting_fs.counts["read_text"] == n_events + 1
         assert counting_fs.counts["exists"] == 0
         # even-length toggle chain ends back on the original name
         assert [f.name for f in df.schema] == ["k", "a", "v"]
@@ -962,11 +922,11 @@ def test_hundred_event_chain_bounded_and_checkpoint_collapses(
     ops10 = costs[10]
     ops100 = costs[100]
     # post-checkpoint metadata cost is FLAT in chain length: one listing,
-    # three checkpoint-payload reads, zero hinted-manifest reads — the
-    # same counts at N=10 and N=100
+    # one checkpoint-payload read, zero hinted-manifest reads — the same
+    # counts at N=10 and N=100
     assert ops100 == ops10
     assert ops100["list_names"] == 1
-    assert ops100["read_text"] == 3
+    assert ops100["read_text"] == 1
     # flatness is proven by the FS op-count equality above; no wall-clock
     # assertion — both reads are sub-second, so a GC pause or loaded CI
     # box dwarfs the signal and any timing bound just flakes (r11 advisor)
@@ -988,9 +948,9 @@ def test_checkpoint_mid_chain_resumes_event_replay(spark, tmp_path, counting_fs)
     counting_fs.reset()
     df = read_version(spark, tbl)
     assert counting_fs.counts["list_names"] == 1
-    # replay: payload + manifests 7,8 (=3); events: payload + hinted 7,8
-    # (=3); first-add: payload + manifests 7,8 (=3)
-    assert counting_fs.counts["read_text"] == 9
+    # the payload + manifests 7,8, each read once: the replay, the
+    # event chain (hinted 7,8) and first-add all resume from them
+    assert counting_fs.counts["read_text"] == 3
     assert [f.name for f in df.schema] == ["k", "a", "v"]
 
     # time travel BEHIND the checkpoint still resolves the exact prefix
@@ -1004,7 +964,7 @@ def test_checkpoint_mid_chain_resumes_event_replay(spark, tmp_path, counting_fs)
     checkpoint_manifest(tbl)
     counting_fs.reset()
     read_version(spark, tbl)
-    assert counting_fs.counts["read_text"] == 3
+    assert counting_fs.counts["read_text"] == 1
 
 
 def test_pre_r11_checkpoint_without_events_field_still_reads(
@@ -1032,6 +992,6 @@ def test_pre_r11_checkpoint_without_events_field_still_reads(
     counting_fs.reset()
     df = read_version(spark, tbl)
     assert [f.name for f in df.schema] == ["k", "a", "v"]
-    # events fall back to payload-check + 4 hinted manifests; replay and
-    # first-add still resume from the payload
-    assert counting_fs.counts["read_text"] == 3 + 4
+    # events fall back to the 4 hinted manifests; the payload, read
+    # once, still serves the replay and first-add resume
+    assert counting_fs.counts["read_text"] == 1 + 4

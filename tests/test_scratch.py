@@ -90,14 +90,11 @@ def test_bench_and_rehearsal_key_lists_are_registered():
 
 
 def test_scale_rehearsal_resume_migrates_old_artifacts():
-    """r11 advisor + r12 tier changes: resuming an sf1 sweep from an older
-    artifact must (a) migrate pre-r11 overwrite-format sampled rows into
-    the sampled sub-record WITHOUT carrying their truthy ok (the full-
-    corpus leg never ran under the old format), (b) drop stale exclusions
-    for keys promoted out of ORACLE_BOUND while keeping by-design and
-    runtime-timeout entries, and (c) re-queue green rows whose evidence
-    tier no longer matches current rules (e.g. a rows-only row for a key
-    that now runs hash_agg)."""
+    """r12 tier changes: resuming an sf1 sweep from an older artifact
+    must (b) drop stale exclusions for keys promoted out of ORACLE_BOUND
+    while keeping by-design and runtime-timeout entries, and (c)
+    re-queue green rows whose evidence tier no longer matches current
+    rules (e.g. a rows-only row for a key that now runs hash_agg)."""
     from tools.scale_rehearsal import ORACLE_BOUND, merge_resume_state
 
     prev = {
@@ -108,8 +105,6 @@ def test_scale_rehearsal_resume_migrates_old_artifacts():
             "some_slow_key": "oracle timeout (> 300s at sf1)",
         },
         "keys": {
-            # pre-r11 overwrite-format sampled row: ok must NOT survive
-            "corpus_clean": {"mode": "hash_sampled", "ok": True, "secs": 9.0},
             # rows-only row for the key that now runs hash_agg: re-queues
             "dedup_simhash_pairs": {"mode": "rows", "ok": True, "rows": 123},
             # rows-only rows for keys promoted to full hash: re-queue
@@ -124,11 +119,6 @@ def test_scale_rehearsal_resume_migrates_old_artifacts():
     state = {"keys": {}, "exclusions": dict(ORACLE_BOUND)}
     merge_resume_state(state, prev)
 
-    # (a) migrated: no top-level ok, sampled sub-record present sans
-    # current-predicate match (so the sampled leg reruns too)
-    cc = state["keys"]["corpus_clean"]
-    assert "ok" not in cc and cc["sampled"]["ok"] is True
-    assert "unrecorded" in cc["sampled"]["sample"]
     # (b) stale exclusions dropped (both r12 promotions), by-design +
     # runtime-timeout entries kept
     assert "similarity_ivf_pruned" not in state["exclusions"]

@@ -2508,13 +2508,9 @@ def test_retired_name_chain_logic_randomized():
             should_refuse = consumed_at is not None
             if should_refuse:
                 with _pytest.raises(ValueError, match="was renamed to"):
-                    _check_retired_names(
-                        "/nowhere", [0], [probe], "test", events
-                    )
+                    _check_retired_names("/nowhere", events, [probe], "test")
             else:
-                _check_retired_names(
-                    "/nowhere", [0], [probe], "test", events
-                )
+                _check_retired_names("/nowhere", events, [probe], "test")
 
 
 def test_checkpoint_first_add_survives_restore_readd(spark, tmp_path):

@@ -394,55 +394,6 @@ def agg_parity_sql(base_sql: str, cols: tuple[str, ...]) -> str:
     FROM __hs
     """
 
-# Round-9 verdict ask #5 (rate raised to 1/3 by round-10 ask #5): keys
-# where only ORACLE JOIN COST (not output mass) is the sf1 bound
-# hash-verify on a deterministic 1/3 crc32(doc_id) sample of the sf1
-# documents corpus — one materialized parquet sample that BOTH engines
-# read, so cross-engine sample agreement is by construction. The full
-# corpus keeps its rows-only check; the sampled evidence is attached as a
-# ``sampled`` sub-record on the key's row so a sampled-leg failure never
-# erases the full-corpus evidence.
-#
-# EMPTY since round 12: the three keys that used this tier (dedup_near,
-# dedup_simhash_stats, corpus_clean) measured far under the oracle
-# timeout on current oracle forms and were promoted to full sf1 parity.
-# The mechanism stays wired so a future oracle-cost-bound key re-enters
-# by adding its name here.
-SAMPLED_PARITY: set[str] = set()
-SAMPLE_PREDICATE = "crc32(cast(doc_id as string)) % 3 = 0"
-
-
-def build_sampled_corpus(spark, workdir: str, src_dir: str) -> str:
-    """gen1_sampled: documents filtered to the crc32 1/3 sample, every
-    other table symlinked to the full gen1 corpus. Deterministic, so a
-    resumed run reuses it (keyed on the predicate — a rate change
-    rebuilds rather than silently reusing the old sample)."""
-    out = os.path.join(workdir, "gen1_sampled")
-    docs_dst = os.path.join(out, "documents.parquet")
-    done = os.path.join(out, "_SAMPLE_DONE")
-    if os.path.exists(done):
-        with open(done) as f:
-            if f.read() == SAMPLE_PREDICATE:
-                return out
-        os.remove(done)
-    os.makedirs(out, exist_ok=True)
-    for name in DDLS:
-        if name == "documents":
-            continue
-        dst = os.path.join(out, f"{name}.parquet")
-        if not os.path.lexists(dst):
-            os.symlink(os.path.join(src_dir, f"{name}.parquet"), dst)
-    (
-        spark.read.parquet(os.path.join(src_dir, "documents.parquet"))
-        .where(SAMPLE_PREDICATE)
-        .repartition(8)
-        .write.mode("overwrite")
-        .parquet(docs_dst)
-    )
-    with open(done, "w") as f:
-        f.write(SAMPLE_PREDICATE)
-    return out
-
 
 def merge_resume_state(state: dict, prev: dict) -> None:
     """Fold a prior artifact into a fresh sweep ``state`` so a resumed run
@@ -453,10 +404,6 @@ def merge_resume_state(state: dict, prev: dict) -> None:
       ORACLE_BOUND since the artifact was written (similarity_ivf_pruned
       in r12) must not re-import its stale exclusion and silently run
       rows-only again.
-    - pre-r11 overwrite-format rows (``mode == "hash_sampled"``): their
-      truthy ok would skip the full-corpus leg the old format never ran —
-      migrate into the sampled sub-record shape and leave the key itself
-      unproven so the full leg reruns (r11 advisor).
     - green rows whose recorded evidence TIER no longer matches what the
       key would run under today's rules (rows vs hash vs hash_agg)
       re-queue instead of carrying stale-tier evidence forward."""
@@ -473,14 +420,8 @@ def merge_resume_state(state: dict, prev: dict) -> None:
     for k, v in prev.get("keys", {}).items():
         if not isinstance(v, dict):
             continue
-        if v.get("mode") == "hash_sampled":
-            sub = {kk: v[kk] for kk in ("ok", "secs", "error") if kk in v}
-            sub.setdefault("sample", "(pre-r11 artifact; predicate unrecorded)")
-            state["keys"][k] = {"sampled": sub}
-        elif v.get("ok"):
-            if v.get("mode") in ("hash", "rows", "hash_agg") and v["mode"] != _want_mode(k):
-                continue  # evidence tier changed since: re-run
-            state["keys"][k] = v
+        if v.get("ok") and v.get("mode") == _want_mode(k):
+            state["keys"][k] = v  # else failed, or the tier changed: re-run
 
 
 def full_registry_sweep(workdir: str, out_path: str, oracle_timeout: float) -> int:
@@ -549,26 +490,10 @@ def full_registry_sweep(workdir: str, out_path: str, oracle_timeout: float) -> i
             "hash_agg_green": sum(
                 1 for v in keys.values() if v.get("ok") and v["mode"] == "hash_agg"
             ),
-            "hash_sampled_green": sum(
-                1
-                for v in keys.values()
-                if v.get("ok") and v.get("sampled", {}).get("ok")
-            ),
             "rows_green": sum(
-                1
-                for v in keys.values()
-                if v.get("ok")
-                and v["mode"] == "rows"
-                and not v.get("sampled", {}).get("ok")
+                1 for v in keys.values() if v.get("ok") and v["mode"] == "rows"
             ),
             "failed": sum(1 for v in keys.values() if not v.get("ok")),
-            # sampled-leg failures are visible but do NOT erase or flip the
-            # key's full-corpus rows evidence (round-10 advisor finding)
-            "sampled_failed": sum(
-                1
-                for v in keys.values()
-                if v.get("sampled") and not v["sampled"].get("ok")
-            ),
         }
         tmp = out_path + ".tmp"
         with open(tmp, "w") as f:
@@ -671,11 +596,6 @@ def full_registry_sweep(workdir: str, out_path: str, oracle_timeout: float) -> i
             row = {"mode": mode, "ok": False, "error": str(e)[:500]}
         row["secs"] = round(time.perf_counter() - t0, 1)
         row.update(legs)
-        # a resumed run may have migrated a pre-r11 sampled sub-record onto
-        # this key (merge_resume_state); merge, don't discard it (r12 advisor)
-        prior = state["keys"].get(name)
-        if isinstance(prior, dict) and "sampled" in prior and "sampled" not in row:
-            row["sampled"] = prior["sampled"]
         state["keys"][name] = row
         flush()
         print(f"sweep[{row['mode']}] {name}: "
@@ -685,55 +605,6 @@ def full_registry_sweep(workdir: str, out_path: str, oracle_timeout: float) -> i
               f"{legs.get('compare_s', '—')})", flush=True)
     con_box["con"].close()
 
-    # sampled-parity leg (round-9 ask #5, rate 1/3 since round 10):
-    # upgrade the oracle-join-cost exclusions from rows-only to hash
-    # evidence on the sample. The sampled attempt lives in a ``sampled``
-    # sub-record on the key's existing full-corpus row — success OR
-    # failure here never overwrites the full-corpus evidence (round-10
-    # advisor finding: the old overwrite erased the rows-green result and
-    # flipped the key to failed on a sampled-leg error).
-    todo = [
-        n for n in sorted(SAMPLED_PARITY)
-        if n in qs and n in oracles
-        and not (
-            state["keys"].get(n, {}).get("sampled", {}).get("ok")
-            and state["keys"][n]["sampled"].get("sample") == SAMPLE_PREDICATE
-        )
-    ]
-    if todo:
-        sampled_dir = build_sampled_corpus(spark, workdir, d)
-        scon = duckdb_con_glob(sampled_dir)
-        for name in todo:
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            legs = {}
-            try:
-                to = time.perf_counter()
-                odf = run_oracle(scon, oracles[name])
-                legs["oracle_s"] = round(time.perf_counter() - to, 1)
-                ts = time.perf_counter()
-                sp = qs[name](spark, sampled_dir).toPandas()
-                legs["spark_s"] = round(time.perf_counter() - ts, 1)
-                tc = time.perf_counter()
-                assert_parity(sp, odf, f"{name}@sf1-sampled", float_rtol=1e-13)
-                legs["compare_s"] = round(time.perf_counter() - tc, 1)
-                sub = {"ok": True, "sample": SAMPLE_PREDICATE}
-                state["exclusions"][name] = (
-                    state["exclusions"].get(name, "")
-                    + " — sf1 parity proven on the deterministic 1/3 "
-                    "crc32(doc_id) sample (sampled.ok); full corpus "
-                    "stays rows-only"
-                )
-            except Exception as e:  # noqa: BLE001 — the artifact records it
-                sub = {"ok": False, "sample": SAMPLE_PREDICATE,
-                       "error": str(e)[:500]}
-            sub["secs"] = round(time.perf_counter() - t0, 1)
-            sub.update(legs)
-            state["keys"].setdefault(name, {})["sampled"] = sub
-            flush()
-            print(f"sweep[hash_sampled] {name}: "
-                  f"{'OK' if sub['ok'] else 'FAIL'} {sub['secs']}s", flush=True)
-        scon.close()
     flush()
     print(json.dumps(state["summary"]))
     spark.stop()
