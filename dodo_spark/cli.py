@@ -448,6 +448,7 @@ def cmd_snapshot(args: argparse.Namespace) -> int:
     from dodo_spark.catalog import load_table
     from dodo_spark.sources.versioned import (
         append_version,
+        check_expectations,
         delete_where,
         list_versions,
         merge_upsert,
@@ -513,8 +514,6 @@ def cmd_snapshot(args: argparse.Namespace) -> int:
             )
 
             if expectations:
-                from dodo_spark.sources.versioned import check_expectations
-
                 check_expectations(df, expectations)
             stats = write_version_bloom_indexed(
                 df, args.path, args.version, args.index_col
@@ -533,8 +532,6 @@ def cmd_snapshot(args: argparse.Namespace) -> int:
             )
 
             if expectations:
-                from dodo_spark.sources.versioned import check_expectations
-
                 check_expectations(df, expectations)
             stats = append_version_bloom_indexed(
                 df, args.path, args.version, args.index_col
@@ -643,8 +640,6 @@ def cmd_snapshot(args: argparse.Namespace) -> int:
         if expectations:
             # gate the UPDATE batch like commit/append gate theirs —
             # --expect must never be silently ignored
-            from dodo_spark.sources.versioned import check_expectations
-
             check_expectations(updates, expectations)
         stats = merge_upsert(spark, args.path, args.version, updates, args.key)
         print(f"merged {args.table} as v{args.version}: {stats}")
@@ -1123,7 +1118,7 @@ def build_parser() -> argparse.ArgumentParser:
                    help="comma columns for directory partitioning")
     e.set_defaults(fn=cmd_export)
 
-    sn = sub.add_parser("snapshot", help="versioned-table commit/list/read (time travel)")
+    sn = sub.add_parser("snapshot", help="versioned tables; checkpoint records every per-file fact")
     sn.add_argument(
         "action",
         choices=["commit", "append", "delete", "merge", "checkpoint",

@@ -26,7 +26,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["QuerySpec", "REGISTRY", "register", "queries", "oracle_sql", "evidence_order"]
+__all__ = ["QuerySpec", "REGISTRY", "register", "queries", "oracle_sql"]
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -94,98 +94,6 @@ def _load_all() -> None:
     from dodo_spark.gendata import infer, plan  # noqa: F401
     from dodo_spark.streaming import events_stream, versioned_sink  # noqa: F401
     from dodo_spark import anonymize, multimodal  # noqa: F401
-
-
-_EVIDENCE_CACHE: dict[str, tuple[int, str]] | None = None
-
-
-def _evidence_rows() -> dict[str, tuple[int, str]]:
-    """Latest completed driver evidence per key: name -> (round, tier) where
-    tier is ``"green"`` (hash_match) or ``"no_oracle"`` (completed rows-only
-    run). Parsed once per process (cached) so ordering cannot drift mid-run."""
-    global _EVIDENCE_CACHE
-    if _EVIDENCE_CACHE is None:
-        import glob
-        import json
-        import os
-        import re
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        latest: dict[str, tuple[int, str]] = {}
-        for p in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-            m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-            rnd = int(m.group(1)) if m else 0
-            try:
-                with open(p) as f:
-                    data = json.load(f)
-            except (OSError, ValueError):
-                continue
-            for k, v in data.items():
-                if not isinstance(v, dict):
-                    continue
-                if v.get("hash_match"):
-                    latest[k] = (rnd, "green")
-                elif v.get("err") == "no_oracle":
-                    latest[k] = (rnd, "no_oracle")
-        _EVIDENCE_CACHE = latest
-    return _EVIDENCE_CACHE
-
-
-def _oracle_md5(sql: str) -> str:
-    import hashlib
-
-    return hashlib.md5(sql.encode()).hexdigest()
-
-
-def _oracle_snapshot() -> dict[str, str]:
-    """ORACLE_SNAPSHOT.json: key -> md5 of the oracle SQL as of the last
-    recorded driver evidence (regenerated by tools/snapshot_oracles.py at
-    round end). A key whose CURRENT oracle differs was edited after its last
-    green row — that row proved the OLD contract, so the key must re-queue."""
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        with open(os.path.join(root, "ORACLE_SNAPSHOT.json")) as f:
-            return {k: str(v) for k, v in json.load(f).items()}
-    except (OSError, ValueError):
-        return {}
-
-
-def evidence_order(names: list[str]) -> list[str]:
-    """DRIVER-TOOL ordering (used only by ``__spark_entry__``, never by the
-    library API), so a driver pass with a key/time budget spends it where
-    evidence is weakest:
-
-    1. UNPROVEN keys first: no completed row in any CORRECTNESS_r*.json; or
-       the latest completed row is the rows-only tier (``err == "no_oracle"``)
-       while the key NOW has an oracle twin (tier upgrade); or the oracle SQL
-       changed since the snapshot taken at the last evidence round (the green
-       row proved a different contract). All invalidate old evidence.
-    2. Then PROVEN keys by evidence age, oldest round first, so a capped pass
-       rotates through stale rows instead of re-picking the same recent ones.
-
-    Stable within each tier/round (registration order preserved by the sort's
-    stability over the incoming ``names`` order)."""
-    _load_all()
-    latest = _evidence_rows()
-    snapshot = _oracle_snapshot()
-
-    def key(n: str) -> tuple[int, int]:
-        row = latest.get(n)
-        if row is None:
-            return (0, 0)  # never checked -> front
-        rnd, tier = row
-        spec = REGISTRY.get(n)
-        if spec is not None and spec.oracle is not None:
-            if tier == "no_oracle":
-                return (0, 1)  # upgraded to full oracle since the rows-only run
-            if snapshot and snapshot.get(n) != _oracle_md5(spec.oracle):
-                return (0, 2)  # oracle edited since the evidence was recorded
-        return (1, rnd)  # proven: oldest evidence first
-
-    return sorted(names, key=key)
 
 
 def queries() -> dict[str, QueryFn]:

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from dodo_spark.operators.runtime_filter import BLOOM_K, BLOOM_M_BITS
 from dodo_spark.sources.versioned import (
+    _bloom_at,
     _canon_file_ref,
     _check_commit_order,
     _check_retired_names,
@@ -46,7 +47,6 @@ from dodo_spark.sources.versioned import (
     _join,
     _Log,
     _logical_read,
-    _rename_triples,
     _schema_cache_get,
     _schema_cache_put,
     _write_data_files,
@@ -280,34 +280,15 @@ def read_point_lookup(
         raise ValueError(
             f"version {version} at {table_path} has no live files"
         )
-    # every entry binds its column name AS OF its manifest's commit; a
-    # later rename_column moved the column, so map each recorded name
-    # through the renames committed AFTER that manifest — exactly the
-    # rule _logical_read applies to the data files (bitmaps hash
-    # rendered VALUES, so they survive the rename unchanged). Without
-    # the mapping, probing a renamed-then-reused name could silently
-    # bind the filter to the WRONG column.
+    # entries and the probed column come from the log fold under their
+    # LOGICAL names at ``version`` (_bloom_at): without the rename
+    # mapping, probing a renamed-then-reused name could silently bind
+    # the filter to the WRONG column
     events = log.events(version)
-    renames = _rename_triples(events)
-
-    def logical_of(name: str, at_version: int) -> str:
-        for rv, frm, to in renames:
-            if rv > at_version and name == frm:
-                name = to
-        return name
-
-    # index entries live in the manifest of each file's ADDING commit
-    idx: dict[str, tuple[dict, str, int, int]] = {}
-    col = None
-    for v, m in log.manifests(version):
-        bi = m.get("bloom_index")
-        if not bi:
-            continue
-        col = logical_of(bi["col"], v)
-        for rel, b64 in bi["files"].items():
-            idx[rel] = (b64, logical_of(bi["col"], v), bi["m_bits"], bi["k"])
-    if col is None:
+    index, entries = _bloom_at(log, version)
+    if index is None:
         raise ValueError(f"no bloom index in any manifest at {table_path}")
+    col = index[0]
 
     # the probe must render through the INDEX COLUMN's type. Fast path
     # (no schema events, column present in the newest-schema file): one
@@ -366,7 +347,7 @@ def read_point_lookup(
         return empty_frame(), {"files_total": len(files), "files_scanned": 0}
     scan_files = []
     for f in files:
-        entry = idx.get(f)
+        entry = entries.get(f)
         if entry is None:
             scan_files.append(f)  # unindexed file: never skip blind
             continue

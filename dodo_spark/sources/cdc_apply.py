@@ -40,7 +40,6 @@ from pyspark.sql.window import Window
 from dodo_spark.sources.versioned import (
     CommitConflict,
     _bloom_rebuild_extra,
-    _canon_file_ref,
     _check_commit_order,
     _check_no_active_dvs,
     _check_retired_names,
@@ -48,6 +47,7 @@ from dodo_spark.sources.versioned import (
     _files_rows_bound,
     _join,
     _logical_read,
+    _match_counts,
     _overlaps,
     _prune_by_stats,
     _write_data_files,
@@ -107,7 +107,6 @@ def apply_cdc_batch(
     n_incoming: int | None = None
     if log.versions:
         prev_live = log.live(log.latest)
-        paths = {f: _join(table_path, f) for f in prev_live}
         keys_df = F.broadcast(incoming.select(key).distinct())
         # one job: key bounds for footer-stats skipping + the batch row
         # count (needed for the return AND the small-commit bound below)
@@ -126,16 +125,11 @@ def apply_cdc_batch(
         )
         if candidates:
             probe = _logical_read(spark, log, candidates, log.latest)
-            hit = {
-                _canon_file_ref(r["f"])
-                for r in probe.join(keys_df, key, "semi")
-                .select(F.input_file_name().alias("f"))
-                .distinct()
-                .collect()
-            }
-            touched = [
-                f for f in candidates if _canon_file_ref(paths[f]) in hit
-            ]
+            touched = list(
+                _match_counts(
+                    table_path, candidates, probe.join(keys_df, key, "semi")
+                )
+            )
 
     if touched:
         existing = _logical_read(spark, log, touched, log.latest)
@@ -255,16 +249,11 @@ def purge_tombstones(
         F.lit(False),
     )
     if candidates:
-        paths = {f: _join(table_path, f) for f in candidates}
-        hits = (
-            _logical_read(spark, log, candidates, log.latest)
-            .filter(doomed)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(F.count("*").alias("n"))
-            .collect()  # bounded: one row per touched FILE
+        by_file = _match_counts(
+            table_path, candidates,
+            _logical_read(spark, log, candidates, log.latest).filter(doomed),
         )
-        by_file = {_canon_file_ref(r["f"]): r["n"] for r in hits}
-        touched = [f for f in candidates if _canon_file_ref(paths[f]) in by_file]
+        touched = list(by_file)
         purged = sum(by_file.values())
     add: list[str] = []
     extra = None

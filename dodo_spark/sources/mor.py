@@ -126,10 +126,8 @@ def apply_dvs_to_files(
     (the Iceberg sequence-number-on-re-add rule — a restore's re-add
     bumps the generation past older DVs, so RESTORE truly undoes a MoR
     delete while older reads keep it) and the schema-event chain all
-    come from the operation's log snapshot, which reads each manifest
-    once."""
-    dvs = log.dvs(version)
-    gens = log.generations(version)
+    come from the operation's log fold."""
+    dvs = log.fold(version, "dvs")
 
     def _scan(paths: list[str]) -> DataFrame:
         # logical names at ``version``. DV sidecars (never in any "add"
@@ -151,7 +149,7 @@ def apply_dvs_to_files(
     # the file list once)
     groups: dict[tuple[int, ...], list[str]] = {}
     for f in files:
-        gen = gens.get(f, version)
+        gen = log.generation(version, f)
         applies = tuple(v for (v, _fs, _k) in dvs if v > gen)
         groups.setdefault(applies, []).append(f)
 

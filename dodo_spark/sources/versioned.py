@@ -78,6 +78,7 @@ path's scheme:
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import re
@@ -614,16 +615,78 @@ def _checkpoint_path(table_path: str, version: int) -> str:
     return _join(table_path, f"{_CHECKPOINT_PREFIX}{version}.json")
 
 
+# every per-file fact of the commit log, as one fold over the manifests:
+# field -> its value before the first commit. A checkpoint records every
+# field at its version (``checkpoint_manifest``)
+_FOLD = {
+    "live": [], "first_add": {}, "spans": {}, "stats": {}, "dvs": [],
+    "bloom": {"index": None, "files": {}},
+}
+
+
+def _fold_manifest(state: dict, v: int, m: dict) -> None:
+    """Fold commit ``v``'s manifest ``m`` into the ``_FOLD`` fields that
+    ``state`` holds. Remove applies before add, so a file in both lists
+    (a restore's re-add) stays live and opens a new span."""
+    add, removed = m.get("add", []), set(m.get("remove", []))
+    if "live" in state:
+        state["live"] = [f for f in state["live"] if f not in removed] + add
+    if "first_add" in state:
+        for f in add:
+            state["first_add"].setdefault(f, v)
+    if "spans" in state:
+        spans = state["spans"]
+        for f in removed:
+            if f in spans and spans[f][-1][1] is None:
+                spans[f][-1][1] = v
+        for f in add:
+            spans.setdefault(f, []).append([v, None])
+    if "stats" in state:
+        state["stats"].update(m.get("stats", {}))
+    if "dvs" in state and m.get("dv"):
+        state["dvs"].append([v, m["dv"], m["dv_key"]])
+    bi = m.get("bloom_index")
+    if "bloom" in state and bi:
+        params = [bi["col"], bi["m_bits"], bi["k"], v]
+        state["bloom"]["index"] = params
+        for f, bits in bi["files"].items():
+            state["bloom"]["files"][f] = [bits, *params]
+
+
+def _live_at(spans: list, version: int) -> bool:
+    """Whether a file with add/remove ``spans`` is live at ``version``."""
+    return any(a <= version and (b is None or version < b) for a, b in spans)
+
+
 class _Log:
     """One operation's read-only snapshot of a table's commit log. The
     table root is listed ONCE, when the snapshot is built; each
     manifest, checkpoint payload and vacuum marker is read at most once,
-    on first use. Every metadata question an operation asks (committed
-    versions, live sets, schema events, first-add versions, file stats,
-    deletion vectors, vacuum markers) is answered here, so an operation
-    pays one listing plus one read per metadata file it needs. A
-    snapshot never outlives its operation: the next operation builds a
-    fresh one and sees every commit published in between."""
+    on first use. A snapshot never outlives its operation: the next
+    operation builds a fresh one and sees every commit published since.
+
+    Every per-file fact comes from ONE fold of the manifests
+    (``fold``). At version ``v`` it holds:
+
+    - ``live``: the live file list (add/remove algebra, stable order);
+    - ``first_add``: each file's FIRST add version (the schema-event
+      chain keys off it: a restore's re-add is pure metadata, so the
+      file's physical column names date from its original write);
+    - ``spans``: each file's ``[added, removed-or-None]`` intervals;
+      the latest add is its GENERATION (a re-add passes older deletion
+      vectors: the Iceberg sequence-number-on-re-add rule);
+    - ``stats``: footer [min, max] per column of every file ever added;
+    - ``dvs``: ``[v, dv_files, key]`` per deletion-vector commit;
+    - ``bloom``: every bloom-index entry with its own (column, m_bits,
+      k, commit version), plus the newest index's.
+
+    Removed files keep their facts (restore and vacuum need them). A
+    field resumes from the latest checkpoint <= ``v`` that records it
+    and folds only the manifests after it; a field that checkpoint
+    lacks (one written by an older build) is folded from v0. Folds run
+    on first use, so an operation that asks no per-file question reads
+    no manifest. Schema events come from the hinted manifests alone
+    (``events``) and resume by the same rule."""
 
     def __init__(self, table_path: str):
         self.path = table_path
@@ -637,6 +700,7 @@ class _Log:
         self._hints = _meta_versions(names, _RENAME_HINT_PREFIX)
         self._vacuums = _meta_versions(names, _VACUUM_PREFIX)
         self._docs: dict[str, dict] = {}
+        self._folds: dict[tuple, dict] = {}
 
     def _doc(self, name: str) -> dict:
         if name not in self._docs:
@@ -659,17 +723,29 @@ class _Log:
         cps = [v for v in self._checkpoints if v <= version]
         return self._doc(f"{_CHECKPOINT_PREFIX}{max(cps)}.json") if cps else None
 
-    def live(self, version: int) -> list[str]:
-        """The live file set AT ``version``: add/remove algebra replayed
-        over the committed manifests <= version (relative paths, stable
-        order), starting from the latest checkpoint <= version when one
-        exists."""
+    def fold(self, version: int, field: str):
+        """Fold ``field`` (a ``_FOLD`` key) at ``version``. The fields
+        that share a starting point, the checkpoint or v0, fold together
+        in one pass over the manifests after it."""
         cp = self.checkpoint(version)
-        live = list(cp["live"]) if cp else []
-        for _v, m in self.manifests(version, cp["version"] if cp else -1):
-            removed = set(m.get("remove", []))
-            live = [f for f in live if f not in removed] + list(m.get("add", []))
-        return live
+        resume = cp is not None and field in cp
+        group = tuple(f for f in _FOLD if (cp is not None and f in cp) == resume)
+        key = (version, group)
+        if key not in self._folds:
+            state = copy.deepcopy({f: cp[f] if resume else _FOLD[f] for f in group})
+            for v, m in self.manifests(version, cp["version"] if resume else -1):
+                _fold_manifest(state, v, m)
+            self._folds[key] = state
+        return self._folds[key][field]
+
+    def live(self, version: int) -> list[str]:
+        """The live file set AT ``version`` (relative paths, stable order)."""
+        return list(self.fold(version, "live"))
+
+    def generation(self, version: int, f: str) -> int:
+        """The latest version <= ``version`` that (re-)added ``f``."""
+        spans = self.fold(version, "spans")
+        return spans[f][-1][0] if f in spans else version
 
     def events(self, version: int) -> list[tuple[int, str, str, str | None]]:
         """Cumulative SCHEMA-EVENT chain at ``version``: ascending
@@ -682,11 +758,8 @@ class _Log:
         the HINTED manifests are read — O(#events), not O(#commits). A
         hint whose manifest is missing (crashed schema change) or carries
         no event entry (the hinted version was won by a different racing
-        writer) is skipped. A checkpoint <= ``version`` that records an
-        ``events`` list (every checkpoint since round 11) resumes the
-        chain: only hinted manifests after it are read. Older
-        checkpoints without the field fall back to every hinted
-        manifest."""
+        writer) is skipped. A checkpoint <= ``version`` that records the
+        chain resumes it: only hinted manifests after it are read."""
         hinted = [v for v in self._hints if v <= version]
         if not hinted:
             return []
@@ -714,58 +787,6 @@ class _Log:
                 out.append((v, "retype", t["column"], t["to"]))
         return out
 
-    def first_add(self, version: int) -> dict[str, int]:
-        """Per-file FIRST add version <= ``version``. The schema-event
-        chain keys off this, not the latest re-add (``generations``): a
-        RESTORE's re-add is pure metadata — the file's physical column
-        names were fixed at its ORIGINAL write, so events committed
-        between the original add and the re-add still apply to it.
-        Resumes from the latest checkpoint's recorded map when one
-        exists (first-add is append-only, so a checkpointed prefix is
-        final)."""
-        cp = self.checkpoint(version)
-        first: dict[str, int] = {}
-        after = -1
-        if cp is not None and "first_add" in cp:
-            first = {f: int(v) for f, v in cp["first_add"].items()}
-            after = cp["version"]
-        for v, m in self.manifests(version, after):
-            for f in m.get("add", []):
-                first.setdefault(f, v)
-        return first
-
-    def generations(self, version: int) -> dict[str, int]:
-        """Per-file GENERATION at read version ``version``: the LATEST
-        version <= it whose manifest (re-)adds the file. A RE-ADD —
-        RESTORE's pure-metadata commit — assigns a NEW generation (the
-        Iceberg data-sequence-number-on-re-add rule), so deletion
-        vectors OLDER than the re-add no longer mask the file's rows:
-        restoring to a pre-delete version truly undoes a merge-on-read
-        DELETE, while reads of the intermediate versions still apply
-        it."""
-        gen: dict[str, int] = {}
-        for v, m in self.manifests(version):
-            for f in m.get("add", []):
-                gen[f] = v
-        return gen
-
-    def dvs(self, version: int) -> list[tuple[int, list[str], str]]:
-        """``[(v, dv_files, key)]`` for every deletion-vector commit
-        <= ``version`` (sources/mor.py), ascending."""
-        return [
-            (v, m["dv"], m["dv_key"])
-            for v, m in self.manifests(version)
-            if m.get("dv")
-        ]
-
-    def stats(self, version: int) -> dict:
-        """{relative file -> {column -> [min, max]}} recorded by the
-        manifests <= ``version``."""
-        out: dict[str, dict] = {}
-        for _v, m in self.manifests(version):
-            out.update(m.get("stats", {}))
-        return out
-
     def vacuum_markers(self) -> list[dict]:
         return [self._doc(f"{_VACUUM_PREFIX}{n}.json") for n in self._vacuums]
 
@@ -789,11 +810,11 @@ class _Log:
             elif version > max(marker["retained"]):
                 swept = False  # committed after this (legacy) vacuum ran
             else:
-                kept: set[str] = set()
-                for rv in marker["retained"]:
-                    if rv in self.versions:
-                        kept.update(self.live(rv))
-                swept = not files <= kept
+                spans = self.fold(self.latest, "spans")
+                swept = not all(
+                    any(_live_at(spans.get(f, []), rv) for rv in marker["retained"])
+                    for f in files
+                )
             if swept:
                 raise ValueError(
                     f"{what or f'version {version} at {self.path} was vacuumed'}"
@@ -833,24 +854,23 @@ def live_files(table_path: str, version: int) -> list[str]:
 
 
 def file_stats(table_path: str, version: int) -> dict:
-    """{relative file -> {column -> [min, max]}} for the committed
-    manifests <= version (files whose commit predates stats support, or
+    """{relative file -> {column -> [min, max]}} for every file added at
+    or before ``version`` (files whose commit predates stats support, or
     whose columns have no footer stats, are simply absent)."""
-    return _Log(table_path).stats(version)
-
-
-def _vacuum_markers(table_path: str) -> list[dict]:
-    return _Log(table_path).vacuum_markers()
+    return _Log(table_path).fold(version, "stats")
 
 
 def checkpoint_manifest(table_path: str, version: int | None = None) -> str:
-    """Write a CHECKPOINT of the live file set at ``version`` (default:
-    latest) — the Delta checkpoint primitive: replaying a long commit
-    chain costs one manifest read per version, so a checkpoint pins the
-    resolved set and ``live_files`` replays only the commits AFTER it.
-    Pure metadata; no data file is read or moved. Idempotent: a
-    checkpoint's content is a pure function of the immutable manifests,
-    so a lost put-if-absent race is a no-op success."""
+    """Write a CHECKPOINT of the commit log at ``version`` (default:
+    latest), the Delta checkpoint primitive. It records the whole
+    ``_Log`` fold at ``version`` (live set, first adds, add/remove
+    spans, footer stats, deletion-vector commits, bloom entries and the
+    newest index) plus the resolved schema-event chain, so every later
+    operation at or after ``version`` reads this payload and only the
+    manifests committed after it. Pure metadata; no data file is read
+    or moved. Idempotent: the payload is a pure function of the
+    immutable manifests, so a lost put-if-absent race is a no-op
+    success."""
     log = _Log(table_path)
     if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
@@ -861,30 +881,9 @@ def checkpoint_manifest(table_path: str, version: int | None = None) -> str:
             f"version {version} not in {log.versions} at {table_path}"
         )
     path = _checkpoint_path(table_path, version)
-    log.fs.put_if_absent_text(
-        path,
-        json.dumps(
-            {
-                "version": version,
-                "live": log.live(version),
-                # FIRST-add version per file ever added <= version (the
-                # rename chain keys off it). Append-only by definition —
-                # a re-add never changes a file's first add — so later
-                # checkpoints extend it and readers resume the scan after
-                # the checkpoint. (The rename chain itself needs no
-                # checkpoint acceleration: _rename_hint_ markers make it
-                # O(#renames) from the directory listing alone.)
-                "first_add": log.first_add(version),
-                # resolved SCHEMA-EVENT chain <= version. Events are an
-                # immutable fact of the committed manifests, so baking
-                # them in lets _Log.events resume here and read only
-                # hinted manifests AFTER the checkpoint — a 100 TB table
-                # with years of schema drift pays O(1), not O(total
-                # events), per read once checkpointed.
-                "events": log.events(version),
-            }
-        ),
-    )
+    payload = {"version": version, **{f: log.fold(version, f) for f in _FOLD}}
+    payload["events"] = log.events(version)
+    log.fs.put_if_absent_text(path, json.dumps(payload))
     return path
 
 
@@ -913,6 +912,26 @@ def _physical_name(
     return name
 
 
+def _bloom_at(log: _Log, version: int) -> tuple[tuple | None, dict]:
+    """The bloom index at ``version`` from the log fold: ``(index,
+    entries)``. ``index`` is the newest index's ``(column, m_bits, k)``
+    (None if never indexed); ``entries`` maps each indexed file to
+    ``(bitmap, column, m_bits, k)`` as it was built. Columns are LOGICAL
+    names at ``version``: the renames committed after an entry move its
+    column (bitmaps hash values, so they survive a rename)."""
+    bloom = log.fold(version, "bloom")
+    renames = _rename_triples(log.events(version))
+
+    def bind(col, m_bits, k, v):
+        for rv, frm, to in renames:
+            if rv > v and col == frm:
+                col = to
+        return (col, m_bits, k)
+
+    index = bind(*bloom["index"]) if bloom["index"] else None
+    return index, {f: (bits, *bind(*p)) for f, (bits, *p) in bloom["files"].items()}
+
+
 def _prune_by_stats(
     log: _Log, version: int, files: list[str], column: str, keep
 ) -> tuple[list[str], list[str]]:
@@ -925,9 +944,9 @@ def _prune_by_stats(
     pruning under the new name). The one data-skipping rule behind
     ``prune_files_by_stats``, merge_upsert's probe and the CDC apply and
     tombstone purge (sources/cdc_apply.py). Pure metadata."""
-    stats = log.stats(version)
+    stats = log.fold(version, "stats")
     renames = _rename_triples(log.events(version))
-    first_add = log.first_add(version) if renames else {}
+    first_add = log.fold(version, "first_add") if renames else {}
     candidates, skipped = [], []
     for f in files:
         phys = _physical_name(column, first_add.get(f, version), renames)
@@ -974,7 +993,7 @@ def _logical_read(
         return scan(files)
     from pyspark.sql import functions as F
 
-    first_add = log.first_add(version)
+    first_add = log.fold(version, "first_add")
     groups: dict[tuple, list[str]] = {}
     for f in files:
         addv = first_add.get(f, version)
@@ -1665,14 +1684,13 @@ def append_version(
 def _masking_dvs(log: _Log, version: int, files: list[str]) -> list[int]:
     """Every deletion-vector commit <= ``version`` when any of them still
     masks one of ``files`` at ``version`` (a DV masks files whose
-    generation predates it — ``_Log.generations``), else []. A flat
-    re-add of such files (a copy-on-write rewrite, a restore, a clone)
-    would silently resurrect the masked rows."""
-    dvs = [v for v, _f, _k in log.dvs(version)]
+    generation predates it — ``_Log.generation``), else []. A flat re-add
+    of such files (a copy-on-write rewrite, a restore, a clone) would
+    silently resurrect the masked rows."""
+    dvs = [v for v, _f, _k in log.fold(version, "dvs")]
     if not dvs:
         return []
-    gens = log.generations(version)
-    if any(gens.get(f, version) < dv for f in files for dv in dvs):
+    if any(log.generation(version, f) < dv for f in files for dv in dvs):
         return dvs
     return []
 
@@ -1690,6 +1708,26 @@ def _check_no_active_dvs(log: _Log, op: str) -> None:
             f"{op} on {log.path} would resurrect rows masked by active "
             f"deletion vectors (commits {dvs}); run purge_deletes first"
         )
+
+
+def _match_counts(table_path: str, files: list[str], matches) -> dict[str, int]:
+    """The touched-file probe of every copy-on-write rewriter:
+    ``{file: matching rows}`` for the ``files`` (in their order) that
+    ``matches``, a filtered scan of them, reads rows from. One job
+    collects one row per matching file; a caller that already collected
+    per-file counts passes them as ``(input_file_name(), n)`` pairs."""
+    from pyspark.sql import functions as F
+
+    if isinstance(matches, DataFrame):
+        matches = [
+            (r["f"], r["n"])
+            for r in matches.groupBy(F.input_file_name().alias("f"))
+            .agg(F.count("*").alias("n"))
+            .collect()
+        ]
+    by_ref = {_canon_file_ref(f): n for f, n in matches}
+    refs = {f: _canon_file_ref(_join(table_path, f)) for f in files}
+    return {f: by_ref[refs[f]] for f in files if refs[f] in by_ref}
 
 
 def delete_where(
@@ -1711,29 +1749,20 @@ def delete_where(
     footer schema, or ``mergeSchema`` when they disagree, so additive
     schema evolution survives a rewrite (a narrower sampled schema would
     silently drop newer columns)."""
-    from pyspark.sql import functions as F
-
     log = _check_commit_order(table_path, version)
     if not log.versions:
         raise ValueError(f"no committed versions at {table_path}")
     _check_no_active_dvs(log, "delete_where")
     prev_live = log.live(log.latest)
-    paths = {f: _join(table_path, f) for f in prev_live}
-    # one scan: per-file count of matching rows (bounded collect: one row
-    # per live file). _logical_read: the predicate binds LOGICAL names,
-    # so the delete reaches rows in files written under a pre-rename
-    # physical name; input_file_name() survives the per-vintage union.
-    counts: dict[str, int] = {}
-    for r in (
-        _logical_read(spark, log, prev_live, log.latest)
-        .filter(predicate)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    ):
-        counts[_canon_file_ref(r["f"])] = r["n"]
-    touched = [f for f in prev_live if _canon_file_ref(paths[f]) in counts]
-    rows_deleted = sum(counts[_canon_file_ref(paths[f])] for f in touched)
+    # _logical_read: the predicate binds LOGICAL names, so the delete
+    # reaches rows in files written under a pre-rename physical name;
+    # input_file_name() survives the per-vintage union
+    counts = _match_counts(
+        table_path, prev_live,
+        _logical_read(spark, log, prev_live, log.latest).filter(predicate),
+    )
+    touched = list(counts)
+    rows_deleted = sum(counts.values())
     add: list[str] = []
     if touched:
         # the rewrite reads logical names, so the survivor files are
@@ -1811,7 +1840,6 @@ def merge_upsert(
         table_path, log.events(log.latest), updates.columns, "merge_upsert"
     )
     prev_live = log.live(log.latest)
-    paths = {f: _join(table_path, f) for f in prev_live}
     # the update set is computed ONCE (3 uses below). Unless its scan
     # inputs already prove it over the small-commit budget, it is
     # collected to Arrow in one bounded job and, when within the budget
@@ -1879,7 +1907,7 @@ def merge_upsert(
             # analysis rejects as a rollup expression — project it to a
             # plain attribute first (same evaluation point as the groupBy
             # form: once per scanned row)
-            for r in (
+            rows = (
                 semi.select(F.input_file_name().alias("__mrg_file"), F.col(key))
                 .rollup("__mrg_file")
                 .agg(
@@ -1888,30 +1916,26 @@ def merge_upsert(
                     F.grouping("__mrg_file").alias("is_total"),
                 )
                 .collect()
-            ):
-                if r["is_total"] == 1:
-                    matched_update_rows = int(r["nk"])
-                else:
-                    counts[_canon_file_ref(r["__mrg_file"])] = r["n"]
+            )
+            matched_update_rows = sum(int(r["nk"]) for r in rows if r["is_total"])
+            counts = _match_counts(
+                table_path, candidates,
+                [(r["__mrg_file"], r["n"]) for r in rows if not r["is_total"]],
+            )
         else:
             # duplicate update keys violate the MERGE contract upstream but
             # keep the pre-fusion two-job semantics: count matched update
             # ROWS directly so duplicates can't skew rows_inserted
-            for r in (
-                semi.groupBy(F.input_file_name().alias("f"))
-                .agg(F.count("*").alias("n"))
-                .collect()
-            ):
-                counts[_canon_file_ref(r["f"])] = r["n"]
+            counts = _match_counts(table_path, candidates, semi)
             matched_update_rows = updates.join(
                 probe_df.select(key).distinct(), key, "semi"
             ).count()
-    touched = [f for f in prev_live if _canon_file_ref(paths[f]) in counts]
+    touched = list(counts)
     # rows_updated = live rows REPLACED (if live carries duplicate keys,
     # every duplicate is replaced by the single update row — MERGE also
     # dedups); rows_inserted counts update rows whose key has no live
     # match, computed so duplicate live keys can't skew it
-    rows_updated = sum(counts[_canon_file_ref(paths[f])] for f in touched)
+    rows_updated = sum(counts.values())
     rows_inserted = n_updates - matched_update_rows
 
     if touched:
@@ -2016,40 +2040,28 @@ def _bloom_rebuild_extra(
     rewriter (compact_files, purge_tombstones): a rewrite invalidates
     the per-file bitmaps of every file it removes; without a rebuild
     the new files would fall back to scan-always (correct but
-    unpruned). If any ancestor manifest carries a bloom_index whose
-    column survives the rewrite, return a manifest ``extra`` with fresh
-    bitmaps for the NEW files — point lookups keep their pruning across
-    rewrites (Delta bloom-filter-index semantics: the index is table
-    metadata, maintenance rewrites maintain it). Returns None when the
-    table was never indexed, the column is gone, or nothing was
-    written. Deliberately NOT called from the per-micro-batch
-    apply_cdc_batch hot path: the index-discovery manifest scan per
-    batch would be a standing tax on unindexed tables; its rewritten
-    files stay scan-always until the next compaction/purge."""
-    bi_meta = None
-    for v in reversed(log.versions):  # newest-first: only the LATEST index
-        bi = log.manifest(v).get("bloom_index")
-        if bi:
-            # the entry binds the column name AS OF its commit; a rename
-            # since then moved the column — rebuild under the LOGICAL
-            # name (bitmaps hash values, so the rename costs nothing)
-            col = bi["col"]
-            for rv, frm, to in _rename_triples(log.events(log.latest)):
-                if rv > v and col == frm:
-                    col = to
-            bi_meta = {"col": col, "m_bits": bi["m_bits"], "k": bi["k"]}
-            break
-    if bi_meta is None or bi_meta["col"] not in schema.names or not add:
+    unpruned). If the table's newest bloom index (``_bloom_at``, its
+    column under the LOGICAL name) names a column the rewrite keeps,
+    return a manifest ``extra`` with fresh bitmaps for the NEW files —
+    point lookups keep their pruning across rewrites (Delta
+    bloom-filter-index semantics: the index is table metadata,
+    maintenance rewrites maintain it). Returns None when the table was
+    never indexed, the column is gone, or nothing was written.
+    Deliberately NOT called from the per-micro-batch apply_cdc_batch
+    hot path: a bitmap job per batch would be a standing tax; its
+    rewritten files stay scan-always until the next compaction/purge."""
+    index, _entries = _bloom_at(log, log.latest)
+    if index is None or index[0] not in schema.names or not add:
         return None
     from dodo_spark.sources.bloom_index import bloom_words_for_files
 
+    col, m_bits, k = index
     # the rewriter just wrote these files from ``df`` — its schema is the
     # files' schema exactly, so the read-back skips footer inference
     blooms = bloom_words_for_files(
-        spark, log.path, add, bi_meta["col"],
-        bi_meta["m_bits"], bi_meta["k"], schema=schema,
+        spark, log.path, add, col, m_bits, k, schema=schema,
     )
-    return {"bloom_index": {**bi_meta, "files": blooms}}
+    return {"bloom_index": {"col": col, "m_bits": m_bits, "k": k, "files": blooms}}
 
 
 class ExpectationViolation(ValueError):
@@ -2130,20 +2142,16 @@ def vacuum(
             if (log.manifest(v).get("ts") or "") >= retain_after
         ]
         retained = sorted(set(retained) | set(by_time))
-    keep: set[str] = set()
-    for v in retained:
-        keep.update(log.live(v))
-    all_files: set[str] = set()
-    for _v, m in log.manifests(log.latest):
-        all_files.update(m.get("add", []))
-    # absolute / fully-qualified refs point into ANOTHER table's root
+    # every file ever added, kept when live at some retained version.
+    # Absolute / fully-qualified refs point into ANOTHER table's root
     # (shallow_clone): this table does not OWN those files, so vacuum
     # must never delete them — only the owning table's vacuum may.
     # Deleting them here would destroy the clone SOURCE's data.
     doomed = sorted(
         f
-        for f in all_files - keep
-        if not (f.startswith("/") or "://" in f)
+        for f, spans in log.fold(log.latest, "spans").items()
+        if not any(_live_at(spans, v) for v in retained)
+        and not (f.startswith("/") or "://" in f)
     )
     # publish the marker BEFORE deleting so a crash mid-delete still
     # reports affected versions as vacuumed rather than file-not-found.
@@ -2182,12 +2190,11 @@ def _sweep_orphan_data_files(log: _Log) -> int:
     number <= max(versions) can never be committed again and the files are
     permanently unreachable. In-flight writers always target a version
     > max(versions) and are never touched."""
-    referenced: set[str] = set()
-    for _v, m in log.manifests(log.latest):
-        referenced.update(m.get("add", []))
-        # deletion-vector sidecars (sources/mor.py) are manifest-
-        # referenced metadata, not orphans
-        referenced.update(m.get("dv") or [])
+    # deletion-vector sidecars (sources/mor.py) are manifest-referenced
+    # metadata, not orphans
+    referenced = set(log.fold(log.latest, "spans")) | {
+        p for _v, dv, _k in log.fold(log.latest, "dvs") for p in dv
+    }
     deleted = 0
     for rel in log.fs.list_files_recursive(log.path):
         top = rel.split("/", 1)[0]
@@ -2377,7 +2384,7 @@ def read_changes(
     # DVs were active on those files (a purge / rewrite after a MoR
     # delete), a raw read would re-subtract the already-removed masked
     # rows — fold-the-feed then undercounts
-    if remove_files and idx > 0 and log.dvs(versions[idx - 1]):
+    if remove_files and idx > 0 and log.fold(versions[idx - 1], "dvs"):
         removed_df = apply_dvs_to_files(
             spark, log, remove_files, versions[idx - 1]
         )
@@ -3263,7 +3270,7 @@ def restore_version(
     table size.
 
     Merge-on-read interaction: the re-add bumps every restored file's
-    GENERATION past older deletion vectors (see ``_Log.generations``),
+    GENERATION past older deletion vectors (see ``_Log``),
     which is exactly right when ``restore_to`` PRECEDES the MoR delete
     (the delete is undone). But when the restored-to state itself has
     an ACTIVE DV, a flat re-add would silently RESURRECT the masked
@@ -3329,22 +3336,22 @@ def _check_restore_rename_collisions(
     renames = _rename_triples(log.events(log.latest))
     if not renames:
         return
-    first_add = log.first_add(log.latest)
+    first_add = log.fold(log.latest, "first_add")
+    spans = log.fold(log.latest, "spans")
+    stats = log.fold(log.latest, "stats")
     for rv, _frm, to in renames:
         if rv <= 0:
             continue
-        # live set at the rename's PREDECESSOR commit — the state whose
+        # live at the rename's PREDECESSOR commit — the state whose
         # columns the rename's validation actually saw
         prev = max((v for v in log.versions if v < rv), default=None)
-        live_then = set(log.live(prev)) if prev is not None else set()
         risky = [
             f
             for f in target_files
-            if first_add.get(f, restore_to) < rv and f not in live_then
+            if first_add.get(f, restore_to) < rv
+            and (prev is None or not _live_at(spans.get(f, []), prev))
         ]
         for f in risky:
-            av = first_add.get(f, restore_to)
-            stats = log.manifest(av).get("stats", {})
             phys = {c.lower() for c in stats.get(f, {})}
             lp = _local_path(_join(log.path, f))
             if lp is not None:
@@ -3608,7 +3615,7 @@ def _clone_preflight(
         # first-added before a rename/drop/retype); after a compaction
         # every live file is physically keyed to the logical schema and
         # the flat clone is faithful
-        first_add = log.first_add(version)
+        first_add = log.fold(version, "first_add")
         if any(
             ev > first_add.get(f, version)
             for f in files
@@ -3681,20 +3688,10 @@ def deep_clone(
             f"then add_external_files / convert."
         )
     log, version, files = _clone_preflight(source_path, target_path, version)
-    bloom_sig = None  # (col, m_bits, k): entries are only comparable
-    bloom_entries: dict[str, str] = {}
-    for _v, m in log.manifests(version):
-        bi = m.get("bloom_index")
-        if bi:
-            sig = (bi["col"], bi["m_bits"], bi["k"])
-            if sig != bloom_sig:
-                # ANY parameter change invalidates older entries: a
-                # bitmap built with different m_bits/k would be misread
-                # (wrong buffer size / wrong probe positions -> silent
-                # false negatives), not just a different column
-                bloom_entries = {}
-            bloom_sig = sig
-            bloom_entries.update(bi["files"])
+    # the clone's one index carries the entries built with the newest
+    # index's parameters: a bitmap read under other m_bits/k would be
+    # misread (silent false negatives)
+    index, entries = _bloom_at(log, version)
     fs = _fs_for(target_path)
     add: list[str] = []
     carried_blooms: dict[str, str] = {}
@@ -3703,15 +3700,15 @@ def deep_clone(
         rel = f"v=0/deep-{i:05d}-{base}"
         fs.copy(_join(source_path, f), _join(target_path, rel))
         add.append(rel)
-        if bloom_sig is not None and f in bloom_entries:
-            carried_blooms[rel] = bloom_entries[f]
+        if f in entries and entries[f][1:] == index:
+            carried_blooms[rel] = entries[f][0]
     extra = None
     if carried_blooms:
         # PARTIAL carry is fine: read_point_lookup's never-skip-blind
         # rule scans files without entries, so the clone behaves exactly
         # like the source (dropping the whole index would instead turn a
         # working lookup into a hard 'no bloom index' error)
-        col, m_bits, k = bloom_sig
+        col, m_bits, k = index
         extra = {
             "bloom_index": {
                 "col": col, "m_bits": m_bits, "k": k,

@@ -177,7 +177,7 @@ def test_evidence_order_puts_unproven_keys_first(tmp_path, monkeypatch):
     import glob as glob_mod
     import json
 
-    from dodo_spark import registry as reg
+    import __spark_entry__ as drv
 
     f = tmp_path / "CORRECTNESS_r01.json"
     f.write_text(json.dumps({
@@ -185,18 +185,18 @@ def test_evidence_order_puts_unproven_keys_first(tmp_path, monkeypatch):
         "rows_only": {"hash_match": False, "err": "no_oracle"},
         "failed": {"hash_match": False, "err": "boom"},
     }))
-    saved = reg._EVIDENCE_CACHE
+    saved = drv._EVIDENCE_CACHE
     monkeypatch.setattr(glob_mod, "glob", lambda pat: [str(f)])
     try:
-        reg._EVIDENCE_CACHE = None
-        order = reg.evidence_order(["green", "rows_only", "failed", "never_seen"])
+        drv._EVIDENCE_CACHE = None
+        order = drv.evidence_order(["green", "rows_only", "failed", "never_seen"])
         # unproven (failed / never_seen) first, stable; proven last, stable
         assert order == ["failed", "never_seen", "green", "rows_only"]
         # cached: mutating the file must NOT change the order mid-process
         f.write_text(json.dumps({}))
-        assert reg.evidence_order(["green", "failed"]) == ["failed", "green"]
+        assert drv.evidence_order(["green", "failed"]) == ["failed", "green"]
     finally:
-        reg._EVIDENCE_CACHE = saved
+        drv._EVIDENCE_CACHE = saved
 
 
 def test_evidence_order_requeues_oracle_tier_upgrades(tmp_path, monkeypatch):
@@ -207,6 +207,7 @@ def test_evidence_order_requeues_oracle_tier_upgrades(tmp_path, monkeypatch):
     import glob as glob_mod
     import json
 
+    import __spark_entry__ as drv
     from dodo_spark import registry as reg
 
     reg._load_all()
@@ -221,17 +222,17 @@ def test_evidence_order_requeues_oracle_tier_upgrades(tmp_path, monkeypatch):
         without_oracle: {"hash_match": False, "err": "no_oracle"},
         "plain_green": {"hash_match": True},
     }))
-    saved = reg._EVIDENCE_CACHE
+    saved = drv._EVIDENCE_CACHE
     monkeypatch.setattr(glob_mod, "glob", lambda pat: [str(f)])
     try:
-        reg._EVIDENCE_CACHE = None
-        order = reg.evidence_order(["plain_green", with_oracle, without_oracle])
+        drv._EVIDENCE_CACHE = None
+        order = drv.evidence_order(["plain_green", with_oracle, without_oracle])
         # the upgraded key re-queues ahead of everything proven; the genuinely
         # oracle-less key keeps its rows-only run as valid evidence
         assert order.index(with_oracle) < order.index("plain_green")
         assert order.index(with_oracle) < order.index(without_oracle)
     finally:
-        reg._EVIDENCE_CACHE = saved
+        drv._EVIDENCE_CACHE = saved
 
 
 def test_evidence_order_requeues_oracle_text_changes(tmp_path, monkeypatch):
@@ -242,25 +243,26 @@ def test_evidence_order_requeues_oracle_text_changes(tmp_path, monkeypatch):
     import glob as glob_mod
     import json
 
+    import __spark_entry__ as drv
     from dodo_spark import registry as reg
 
     reg._load_all()
     k1, k2 = list(reg.REGISTRY)[:2]
     f = tmp_path / "CORRECTNESS_r02.json"
     f.write_text(json.dumps({k1: {"hash_match": True}, k2: {"hash_match": True}}))
-    saved = reg._EVIDENCE_CACHE
+    saved = drv._EVIDENCE_CACHE
     monkeypatch.setattr(glob_mod, "glob", lambda pat: [str(f)])
     # snapshot knows k2's current oracle but not k1's (= k1 edited since)
     monkeypatch.setattr(
-        reg, "_oracle_snapshot",
-        lambda: {k2: reg._oracle_md5(reg.REGISTRY[k2].oracle)},
+        drv, "_oracle_snapshot",
+        lambda: {k2: drv._oracle_md5(reg.REGISTRY[k2].oracle)},
     )
     try:
-        reg._EVIDENCE_CACHE = None
-        order = reg.evidence_order([k2, k1])
+        drv._EVIDENCE_CACHE = None
+        order = drv.evidence_order([k2, k1])
         assert order == [k1, k2]
     finally:
-        reg._EVIDENCE_CACHE = saved
+        drv._EVIDENCE_CACHE = saved
 
 
 def test_oracle_snapshot_is_current_except_declared_stale(tmp_path):
@@ -270,6 +272,7 @@ def test_oracle_snapshot_is_current_except_declared_stale(tmp_path):
     import json
     import os
 
+    import __spark_entry__ as drv
     from dodo_spark import registry as reg
 
     reg._load_all()
@@ -279,7 +282,7 @@ def test_oracle_snapshot_is_current_except_declared_stale(tmp_path):
     mismatched = [
         n for n, h in snap.items()
         if n in reg.REGISTRY and reg.REGISTRY[n].oracle is not None
-        and reg._oracle_md5(reg.REGISTRY[n].oracle) != h
+        and drv._oracle_md5(reg.REGISTRY[n].oracle) != h
     ]
     assert mismatched == [], (
         f"oracles edited without snapshot regen (run tools/snapshot_oracles.py "
@@ -293,7 +296,7 @@ def test_evidence_order_rotates_proven_keys_by_age(tmp_path, monkeypatch):
     import glob as glob_mod
     import json
 
-    from dodo_spark import registry as reg
+    import __spark_entry__ as drv
 
     f1 = tmp_path / "CORRECTNESS_r01.json"
     f1.write_text(json.dumps({"old_green": {"hash_match": True},
@@ -301,16 +304,16 @@ def test_evidence_order_rotates_proven_keys_by_age(tmp_path, monkeypatch):
     f3 = tmp_path / "CORRECTNESS_r03.json"
     f3.write_text(json.dumps({"refreshed": {"hash_match": True},
                               "new_green": {"hash_match": True}}))
-    saved = reg._EVIDENCE_CACHE
+    saved = drv._EVIDENCE_CACHE
     monkeypatch.setattr(glob_mod, "glob", lambda pat: [str(f1), str(f3)])
     try:
-        reg._EVIDENCE_CACHE = None
-        order = reg.evidence_order(["refreshed", "new_green", "old_green", "fresh"])
+        drv._EVIDENCE_CACHE = None
+        order = drv.evidence_order(["refreshed", "new_green", "old_green", "fresh"])
         assert order[0] == "fresh"  # unproven still first
         assert order[1] == "old_green"  # r1 vintage before r3 vintage
         assert order[2:] == ["refreshed", "new_green"]  # stable within r3
     finally:
-        reg._EVIDENCE_CACHE = saved
+        drv._EVIDENCE_CACHE = saved
 
 
 def test_winnow_hash_cross_engine_fuzz(spark):

@@ -984,7 +984,7 @@ def test_legacy_vacuum_marker_without_deleted_list(spark, table):
     import json as _json
 
     from dodo_spark.sources.versioned import (
-        _vacuum_markers,
+        _Log,
         append_version,
         vacuum,
         write_version,
@@ -1003,7 +1003,7 @@ def test_legacy_vacuum_marker_without_deleted_list(spark, table):
     legacy.pop("deleted")
     with open(marker_path, "w") as f:
         _json.dump(legacy, f)
-    assert _vacuum_markers(str(table))[0].get("deleted") is None
+    assert _Log(str(table)).vacuum_markers()[0].get("deleted") is None
 
     append_version(
         spark.createDataFrame([(7, 70.0)], "k BIGINT, val DOUBLE"), table, 3

@@ -1,10 +1,10 @@
 """Regenerate ORACLE_SNAPSHOT.json: key -> md5 of each registered oracle SQL.
 
 Run at ROUND END (after the driver's correctness pass), so the snapshot
-records the oracle text the evidence actually proved. evidence_order
-re-queues any key whose current oracle md5 differs from this snapshot —
-editing an oracle mid-round therefore automatically invalidates the key's
-prior green rows.
+records the oracle text the evidence actually proved. The driver
+adapter's evidence_order (``__spark_entry__.py``) re-queues any key whose
+current oracle md5 differs from this snapshot — editing an oracle
+mid-round therefore automatically invalidates the key's prior green rows.
 
 Keys listed in _STALE are deliberately OMITTED this run because their
 oracle changed after the most recent driver evidence; omission = "treat as
